@@ -49,8 +49,8 @@ def lit_str_map(mapping) -> Column:
     """``map<string,string>`` literal as one SQL expression (insertion
     order preserved, like ``create_map``)."""
     items = list(mapping.items())
-    if not items:  # pragma: no cover - no empty literal maps in the engine
-        return F.create_map()
+    if not items:
+        return F.create_map().cast("map<string,string>")
     body = ",".join(f"{sql_str(k)},{sql_str(v)}" for k, v in items)
     return F.expr("map(" + body + ")")
 
@@ -58,8 +58,8 @@ def lit_str_map(mapping) -> Column:
 def lit_str_array_map(mapping) -> Column:
     """``map<string,array<string>>`` literal as one SQL expression."""
     items = list(mapping.items())
-    if not items:  # pragma: no cover - no empty literal maps in the engine
-        return F.create_map()
+    if not items:
+        return F.create_map().cast("map<string,array<string>>")
     body = ",".join(
         f"{sql_str(k)},array({','.join(sql_str(v) for v in vs)})"
         if vs
@@ -73,7 +73,7 @@ def lit_str_int_map(mapping) -> Column:
     """``map<string,int>`` literal as one SQL expression (values are
     Python ints rendered as INT literals, matching ``F.lit(int)``)."""
     items = list(mapping.items())
-    if not items:  # pragma: no cover - no empty literal maps in the engine
-        return F.create_map()
+    if not items:
+        return F.create_map().cast("map<string,int>")
     body = ",".join(f"{sql_str(k)},{int(v)}" for k, v in items)
     return F.expr("map(" + body + ")")

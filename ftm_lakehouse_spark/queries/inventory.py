@@ -6770,8 +6770,8 @@ def pipeline_zorder_scan(spark, sf_dir):
     deterministic) → MVCC append → ``compact(zorder=("entity_id",
     "first_seen"))`` — quantile-rank Morton clustering via a range
     repartition — → ``scan_range`` over a 5-day window, which prunes
-    the live file set through parquet footer min/max stats BEFORE
-    planning the scan. The oracle is the plain filtered aggregate over
+    the live file set through the per-file min/max stats in the commit
+    log BEFORE planning the scan. The oracle is the plain filtered aggregate over
     the source events: the gate grades that stats-based file pruning
     is exactly lossless end to end (tests/test_zorder.py pins that it
     also actually PRUNES; this pins that it never over-prunes)."""

@@ -143,12 +143,10 @@ class PointReader:
         self._lock = threading.Lock()
         self._cached_version: int | None = None
         self._cached_index: dict[str, list[tuple[str, str]]] = {}
-        # read plane: stores on an object store expose a pyarrow
-        # filesystem (S3FS.pyarrow_fs) — every footer/row-group read
-        # below goes through it as a ranged GET; local stores read
-        # paths directly (pyarrow_fs absent → (None, identity))
-        hook = getattr(store._fs, "pyarrow_fs", None)
-        self._pafs, self._norm = hook() if hook else (None, lambda p: p)
+        # read plane (StatementStore._read_plane): on an object store
+        # every footer/row-group read below is a ranged GET; local
+        # stores read paths directly
+        self._pafs, self._norm = store._read_plane
         if self._pafs is not None:
             # object store: per-file latency is network GETs — a wider
             # pool hides it (instance attr; class default covers local)

@@ -30,10 +30,16 @@ provides the same contract from first principles:
     removal set, so they survive the rewrite and the partition simply
     stays dirty (``read_version`` on the rewrite record is what the
     dirty check compares against).
+  * **Per-file statistics.** A record's ``stats`` maps each added
+    file to its footer stats (rows, bytes, null counts, min/max — see
+    sources/parquet_meta.py), so file skipping is a log lookup
+    (:meth:`CommitLog.snapshot_stats`), Delta's ``add.stats``.
   * **Checkpoints.** Every ``CHECKPOINT_INTERVAL`` commits the full
-    live file set is folded into ``checkpoint-{version}.json`` so a
-    snapshot replays O(interval) records, not O(history) — the log
-    never becomes the read bottleneck at 100 TB commit counts.
+    live file set (and its stats) is folded into
+    ``checkpoint-{version}.json`` so a snapshot replays O(interval)
+    records, not O(history) — the log never becomes the read
+    bottleneck at 100 TB commit counts. A log object keeps its newest
+    replayed snapshot and folds only later records onto it.
   * **Time travel.** ``snapshot(version=N)`` resolves the table as of
     commit N for as long as retired files remain un-vacuumed
     (StatementStore.vacuum applies the retention).
@@ -44,6 +50,7 @@ from __future__ import annotations
 import json
 import os
 import random
+import threading
 import time
 import uuid
 from datetime import datetime, timezone
@@ -189,6 +196,13 @@ class CommitLog:
         #: payload unique so the non-atomic-store read-back fence can
         #: tell WHOSE bytes actually landed
         self._writer = f"{os.getpid()}-{uuid.uuid4().hex[:12]}"
+        #: (version, live files, stats) of the newest snapshot replayed.
+        #: Published records never change, so a later snapshot folds
+        #: only the records after it instead of re-reading every record
+        #: since the checkpoint (which, carrying per-file stats, are
+        #: tens of KB each). Replaced, never mutated.
+        self._newest: tuple[int, set[str], dict[str, dict]] | None = None
+        self._newest_lock = threading.Lock()
 
     def _publish(self, version: int, payload: str) -> bool:
         """Put-if-absent of one record — the pluggable atomicity seam.
@@ -285,10 +299,14 @@ class CommitLog:
         files_removed: list[str] | None = None,
         read_version: int | None = None,
         txn: tuple[str, int] | None = None,
+        stats: dict[str, dict | None] | None = None,
     ) -> int | None:
         """Atomically publish one write job; returns the version won.
 
         ``files_added`` / ``files_removed`` are data-dir-relative.
+        ``stats`` maps added files to their footer stats
+        (``parquet_meta.file_stats``); files without an entry (or with
+        None) carry no stats and are never pruned.
         ``read_version`` (rewrites): the snapshot version the rewrite
         was computed from — the dirty check compares append versions
         against it. Raises :class:`CommitConflict` if a concurrent
@@ -315,6 +333,9 @@ class CommitLog:
             record["read_version"] = read_version
         if txn is not None:
             record["txn"] = [txn[0], int(txn[1])]
+        stats = {f: stats[f] for f in record["files_added"] if (stats or {}).get(f)}
+        if stats:
+            record["stats"] = stats
         for _a in range(MAX_COMMIT_ATTEMPTS):
             head = self.current_version()
             if txn is not None and self.txn_version(txn[0], head) >= int(txn[1]):
@@ -368,21 +389,23 @@ class CommitLog:
 
     def _write_checkpoint(self, version: int) -> None:
         """Fold the FULL protocol state at ``version`` into one file —
-        live files, per-app txn watermarks, and the dirty-tracking
-        maps — so replay (and therefore correctness) never needs
-        records older than the newest checkpoint, which is what makes
-        log cleanup safe. Content is a pure function of the log
-        prefix, so overwrite is idempotent; best-effort — a missed
-        checkpoint only means a longer replay."""
+        live files and their stats, per-app txn watermarks, and the
+        dirty-tracking maps — so replay (and therefore correctness)
+        never needs records older than the newest checkpoint, which is
+        what makes log cleanup safe. ``stats`` sits next to ``files``
+        (live files only), so a reader that knows only ``files`` is
+        unaffected. Content is a pure function of the log prefix, so
+        overwrite is idempotent; best-effort — a missed checkpoint only
+        means a longer replay."""
         cp = self._checkpoint_state(version)
         base = cp["version"] if cp else 0
         files = set(cp["files"]) if cp else set()
+        stats = dict(cp.get("stats", {})) if cp else {}
         txns = dict(cp.get("txns", {})) if cp else {}
         cleared = dict(cp.get("cleared_at", {})) if cp else {}
         appended = dict(cp.get("appended_at", {})) if cp else {}
         for rec in self.read(base, version):
-            files.update(rec["files_added"])
-            files.difference_update(rec.get("files_removed", ()))
+            self._fold_files(rec, files, stats)
             t = rec.get("txn")
             if t:
                 txns[t[0]] = max(int(txns.get(t[0], -1)), int(t[1]))
@@ -390,6 +413,7 @@ class CommitLog:
         state = {
             "version": version,
             "files": sorted(files),
+            "stats": stats,
             "txns": txns,
             "cleared_at": cleared,
             "appended_at": appended,
@@ -398,6 +422,16 @@ class CommitLog:
             self._fs.write_text_atomic(self._checkpoint_path(version), json.dumps(state))
         except OSError:  # pragma: no cover - checkpoint is an optimization
             pass
+
+    @staticmethod
+    def _fold_files(rec: dict, files: set[str], stats: dict[str, dict]) -> None:
+        """Replay one record onto a live file set and its stats: add,
+        then discard."""
+        files.update(rec["files_added"])
+        stats.update(rec.get("stats", {}))
+        for f in rec.get("files_removed", ()):
+            files.discard(f)
+            stats.pop(f, None)
 
     @staticmethod
     def _fold_dirty(rec: dict, cleared: dict, appended: dict) -> None:
@@ -500,11 +534,42 @@ class CommitLog:
                 return json.loads(self._fs.read_text(self._checkpoint_path(v)))
         return None
 
-    def _latest_checkpoint(self, at_or_before: int) -> tuple[int, set[str]]:
-        state = self._checkpoint_state(at_or_before)
-        if state is None:
-            return 0, set()
-        return state["version"], set(state["files"])
+    def _replay(
+        self, version: int | None, use_checkpoint: bool = True
+    ) -> tuple[set[str], dict[str, dict]]:
+        """(live files, stats) at ``version``; callers must not mutate
+        them (they may be the cached newest state)."""
+        head = self.current_version() if version is None else version
+        newest = self._newest if use_checkpoint else None
+        if newest is not None and newest[0] == head:
+            return newest[1], newest[2]
+        if (
+            newest is not None
+            and newest[0] < head
+            and newest[0] + 1 >= self.oldest_version()
+        ):
+            base, files, stats = newest[0], set(newest[1]), dict(newest[2])
+        else:
+            cp = self._checkpoint_state(head) if use_checkpoint else None
+            base = cp["version"] if cp else 0
+            files = set(cp["files"]) if cp else set()
+            stats = dict(cp.get("stats", {})) if cp else {}
+            if head > base and base + 1 < self.oldest_version():
+                raise LogTruncated(
+                    f"records ({base}, {head}] predate log cleanup; "
+                    "this version is no longer reconstructible"
+                )
+        recs = self.read(since=base, until=head)
+        for rec in recs:
+            self._fold_files(rec, files, stats)
+        # a version past the log's head replays to the head: never
+        # remember that state under the unwritten version number
+        exists = head == base or (recs and recs[-1]["version"] == head)
+        if use_checkpoint and exists:
+            with self._newest_lock:
+                if self._newest is None or head > self._newest[0]:
+                    self._newest = (head, files, stats)
+        return files, stats
 
     def snapshot(self, version: int | None = None, use_checkpoint: bool = True) -> list[str]:
         """Live data files at ``version`` (default: head) — the MVCC
@@ -513,17 +578,16 @@ class CommitLog:
         :class:`LogTruncated` for a version whose records log cleanup
         has removed (time travel expires with the retention window,
         exactly like Delta after VACUUM + log cleanup)."""
-        head = self.current_version() if version is None else version
-        base, files = self._latest_checkpoint(head) if use_checkpoint else (0, set())
-        if head > base and base + 1 < self.oldest_version():
-            raise LogTruncated(
-                f"records ({base}, {head}] predate log cleanup; "
-                "this version is no longer reconstructible"
-            )
-        for rec in self.read(since=base, until=head):
-            files.update(rec["files_added"])
-            files.difference_update(rec.get("files_removed", ()))
-        return sorted(files)
+        return sorted(self._replay(version, use_checkpoint)[0])
+
+    def snapshot_stats(self, version: int | None = None) -> dict[str, dict | None]:
+        """``{file: stats}`` for every live file at ``version`` — the
+        keys are exactly :meth:`snapshot`, replayed with the same
+        add/remove algebra. None marks a file whose add carried no
+        stats (a bootstrap adoption, or a log written before stats
+        were recorded)."""
+        files, stats = self._replay(version)
+        return {f: stats.get(f) for f in sorted(files)}
 
     def files_since(self, since: int) -> tuple[list[str], set[tuple[str, ...]]]:
         """Incremental read set after commit ``since``:

@@ -18,17 +18,22 @@ against a consistent snapshot).
 Scale: the FIRST export writes one JSON line per live file — O(files),
 no data movement, no scan. Every subsequent export is INCREMENTAL
 (round-6 VERDICT item 4): it appends Delta version N+1 containing only
-the ``add``/``remove`` delta since the last export — derived by
-folding the store's commit records after the recorded ``sourceVersion``
-cursor (the same ordered add-then-discard algebra as
-``CommitLog.snapshot``/``files_since``) — so consumers polling the log
-see one stable table id with a growing history, and each publish costs
-O(changes), not O(files). Every ``checkpoint_interval`` versions the
+the ``add``/``remove`` delta since the last export — the difference
+between the store's snapshot now and the live set replayed from the
+exported log — so consumers polling the log see one stable table id
+with a growing history, and each publish writes O(changes). Every ``checkpoint_interval`` versions the
 exporter also writes a classic single-file parquet checkpoint plus the
 ``_last_checkpoint`` pointer, so ANY reader's log replay (including
 :func:`read_delta_snapshot`, delta-spark, delta-rs) stays
 O(interval + files) regardless of how many versions have been
 published.
+
+Each ``add`` carries Delta's ``stats`` JSON (``numRecords``,
+``minValues``, ``maxValues``, ``nullCount``) and its ``size`` straight
+from the store's log-resident per-file stats (sources/parquet_meta.py),
+so foreign Delta readers skip files too and the export needs no per-file
+size request. Files whose add carried no stats (adopted or pre-stats)
+are exported without ``stats`` and sized with one ``fs.filesize``.
 """
 
 from __future__ import annotations
@@ -157,25 +162,30 @@ def _metadata_action(store, now_ms: int) -> dict:
     }
 
 
-def _add_action(fs, data: str, rel: str, now_ms: int) -> dict:
-    return {
-        "add": {
-            "path": rel,
-            "partitionValues": _partition_values(rel),
-            "size": fs.filesize(fs.join(data, rel)),
-            "modificationTime": now_ms,
-            "dataChange": True,
-        }
+def _add_action(fs, data: str, rel: str, now_ms: int, stats: dict | None) -> dict:
+    """One ``add``; ``stats`` is the file's log stats entry or None."""
+    add = {
+        "path": rel,
+        "partitionValues": _partition_values(rel),
+        "size": stats["size"] if stats else fs.filesize(fs.join(data, rel)),
+        "modificationTime": now_ms,
+        "dataChange": True,
     }
+    if stats:
+        add["stats"] = json.dumps(
+            {k: stats[k] for k in ("numRecords", "minValues", "maxValues", "nullCount")}
+        )
+    return {"add": add}
 
 
 def _write_checkpoint(
-    store, fs, log_dir, version: int, live: set[str], now_ms: int,
-    source_version: int = 0,
+    store, fs, log_dir, version: int, stats: dict[str, dict | None],
+    now_ms: int, source_version: int = 0,
 ):
     """Classic single-file parquet checkpoint (PROTOCOL.md
     "Checkpoints"): one row per action — protocol, metaData, and one
-    ``add`` per live file — plus the ``_last_checkpoint`` pointer.
+    ``add`` per live file (``stats``: the live snapshot, ``{file: log
+    stats or None}``) — plus the ``_last_checkpoint`` pointer.
     Written with pyarrow driver-side (O(files) rows of metadata, no
     Spark job); the nested columns mirror the JSON action shapes, which
     is exactly what :func:`read_delta_snapshot` (and any Delta reader)
@@ -219,10 +229,11 @@ def _write_checkpoint(
             ("size", pa.int64()),
             ("modificationTime", pa.int64()),
             ("dataChange", pa.bool_()),
+            ("stats", pa.string()),
         ]
     )
     rows_proto = [{"minReaderVersion": 1, "minWriterVersion": 2}] + [None] * (
-        1 + len(live)
+        1 + len(stats)
     )
     rows_meta = [None] + [
         {
@@ -233,16 +244,13 @@ def _write_checkpoint(
             "configuration": [],
             "createdTime": meta["createdTime"],
         }
-    ] + [None] * len(live)
+    ] + [None] * len(stats)
+    adds = [
+        _add_action(fs, data, rel, now_ms, stats[rel])["add"]
+        for rel in sorted(stats)
+    ]
     rows_add = [None, None] + [
-        {
-            "path": rel,
-            "partitionValues": list(_partition_values(rel).items()),
-            "size": fs.filesize(fs.join(data, rel)),
-            "modificationTime": now_ms,
-            "dataChange": True,
-        }
-        for rel in sorted(live)
+        a | {"partitionValues": list(a["partitionValues"].items())} for a in adds
     ]
     tbl = pa.table(
         {
@@ -278,12 +286,10 @@ def export_delta_log(
 
     First call writes version 0 with the full live file set. Each
     later call appends version N+1 carrying only ``add``/``remove``
-    actions for what changed since the previous export — the delta is
-    derived by folding the store's commit records after the previous
-    export's ``sourceVersion`` cursor over the previously-published
-    live set (identical algebra to ``CommitLog.snapshot``; restores
-    and rewrites fold correctly because liveness is decided by ordered
-    replay). Idempotent: exporting twice at the same store version
+    actions for what changed since the previous export — the
+    difference between the store's snapshot at its current version and
+    the previously-published live set (restores and rewrites need no
+    special case). Idempotent: exporting twice at the same store version
     returns the existing head without writing. Every
     ``checkpoint_interval`` versions a parquet checkpoint +
     ``_last_checkpoint`` is written (see :func:`_write_checkpoint`).
@@ -299,35 +305,25 @@ def export_delta_log(
     state = _log_state(fs, log_dir)
     source_now = store.commits.current_version()
 
+    if state is not None and source_now == state[1]:
+        return fs.join(log_dir, f"{state[0]:020d}.json")  # no-op re-export
+    stats = store.commits.snapshot_stats(source_now)
+    live = set(stats)
     if state is None:
-        live = set(store.commits.snapshot())
         version = 0
         actions = [
             {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},
             _metadata_action(store, now_ms),
         ]
-        actions += [_add_action(fs, data, rel, now_ms) for rel in sorted(live)]
+        actions += [
+            _add_action(fs, data, rel, now_ms, stats[rel]) for rel in sorted(live)
+        ]
         operation = "CONVERT"
     else:
-        version, prev_source, prev_live = state
-        if source_now == prev_source:
-            return fs.join(log_dir, f"{version:020d}.json")  # no-op re-export
-        if prev_source + 1 >= store.commits.oldest_version():
-            folded: dict[str, None] = dict.fromkeys(sorted(prev_live))
-            for rec in store.commits.read(since=prev_source):
-                for f in rec["files_added"]:
-                    folded[f] = None
-                for f in rec.get("files_removed", ()):
-                    folded.pop(f, None)
-            live = set(folded)
-        else:
-            # the store's log cleanup removed records past the cursor —
-            # fall back to a full current-snapshot state diff (still
-            # published as ONE incremental Delta version)
-            live = set(store.commits.snapshot())
+        version, _, prev_live = state
         version += 1
         actions = [
-            _add_action(fs, data, rel, now_ms)
+            _add_action(fs, data, rel, now_ms, stats[rel])
             for rel in sorted(live - prev_live)
         ]
         actions += [
@@ -362,7 +358,7 @@ def export_delta_log(
     fs.write_text_atomic(log_path, "\n".join(json.dumps(a) for a in actions) + "\n")
     if version > 0 and checkpoint_interval > 0 and version % checkpoint_interval == 0:
         _write_checkpoint(
-            store, fs, log_dir, version, live, now_ms,
+            store, fs, log_dir, version, stats, now_ms,
             source_version=source_now,
         )
     return log_path

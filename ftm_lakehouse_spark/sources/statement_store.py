@@ -59,6 +59,7 @@ from ftm_lakehouse_spark.model.statement import (
 from ftm_lakehouse_spark.operators.merge import canonicalize
 from ftm_lakehouse_spark.sources.commits import CommitLog
 from ftm_lakehouse_spark.sources.fs import get_fs
+from ftm_lakehouse_spark.sources.parquet_meta import encode_bound, read_file_stats
 
 __all__ = ["StatementStore", "TagStore"]
 
@@ -72,6 +73,14 @@ def _partition_of(rel_file: str) -> tuple[str, ...]:
     return tuple(
         seg.split("=", 1)[1] for seg in rel_file.split("/")[:-1] if "=" in seg
     )
+
+
+def _overlaps(stats: dict | None, column: str, lo: str, hi: str) -> bool:
+    """Whether a file's log stats leave ``[lo, hi]`` possible for
+    ``column``; unknown stats keep the file."""
+    f_lo = (stats or {}).get("minValues", {}).get(column)
+    f_hi = (stats or {}).get("maxValues", {}).get(column)
+    return f_lo is None or f_hi is None or (f_hi >= lo and f_lo <= hi)
 
 
 class TagStore:
@@ -167,10 +176,24 @@ class StatementStore:
             self._maint_lock = StatementStore._maint_locks.setdefault(
                 _lock_key(path), threading.RLock()
             )
+        # driver-side parquet read plane: object stores expose a
+        # pyarrow filesystem (S3FS.pyarrow_fs, ranged GETs); local and
+        # Hadoop paths are read directly. Shared by footer-stats reads
+        # and serving.PointReader.
+        hook = getattr(self._fs, "pyarrow_fs", None)
+        self._read_plane = hook() if hook else (None, lambda p: p)
 
     # ---------------------------------------------------------- reads
     def _data_path(self) -> str:
         return self._fs.join(self.path, "statements")
+
+    def _footer_stats(self, rels) -> dict[str, dict | None]:
+        """Log stats of data files, read from their footers (see
+        ``parquet_meta.read_file_stats``)."""
+        data = self._data_path()
+        return read_file_stats(
+            {r: self._fs.join(data, r) for r in rels}, self._read_plane
+        )
 
     def exists(self) -> bool:
         return self.commits.current_version() > 0 or self._fs.isdir(self._data_path())
@@ -319,10 +342,12 @@ class StatementStore:
         df: DataFrame,
         zorder: tuple[str, ...] | None = None,
         streaming: bool = False,
-    ) -> tuple[set[str], list[tuple[str, ...]]]:
+    ) -> tuple[dict[str, dict | None], list[tuple[str, ...]]]:
         """Write ``df`` via a private stage directory, then move each
-        (uniquely-named) file into the table. Returns (data-dir-relative
-        files, partitions touched). The private stage removes the stock
+        (uniquely-named) file into the table. Returns ({data-dir-relative
+        file: footer stats}, partitions touched) — the stats the commit
+        record carries, read once per file right after the move
+        (``_footer_stats``). The private stage removes the stock
         committer's shared ``_temporary`` hazard, so ANY number of
         writers — threads or drivers — can run this concurrently; files
         become *visible* only when the caller's commit record lands.
@@ -418,7 +443,7 @@ class StatementStore:
             moved.update(src_rels)
             fs.delete(src_root)
         parts = sorted({_partition_of(f) for f in moved})
-        return moved, parts
+        return self._footer_stats(sorted(moved)), parts
 
     def append(
         self,
@@ -476,7 +501,7 @@ class StatementStore:
         # the atomic replay re-check inside commit() closes the race
         # two concurrent replays of one epoch could otherwise hit;
         # a loser's staged files are untracked and vacuumed
-        self.commits.commit("append", parts, sorted(added), txn=txn)
+        self.commits.commit("append", parts, sorted(added), txn=txn, stats=added)
         self.tags.touch("last_updated")
 
     @staticmethod
@@ -600,6 +625,7 @@ class StatementStore:
             sorted(added),
             sorted(files_removed),
             read_version=read_version,
+            stats=added,
         )
 
     # ---------------------------------------------------- maintenance
@@ -709,48 +735,39 @@ class StatementStore:
 
     def scan_range(self, column: str, lo, hi) -> DataFrame:
         """Range scan with ENGINE-side file pruning: read only the live
-        files whose footer min/max for ``column`` overlaps ``[lo, hi]``,
-        then apply the exact predicate to the survivors.
+        files whose min/max for ``column`` overlaps ``[lo, hi]``, then
+        apply the exact predicate to the survivors — Delta's stats-based
+        file skipping. Planning is a commit-log lookup and fires no
+        Spark job: each file's min/max was recorded in the commit that
+        added it (``CommitLog.snapshot_stats``). Files whose add
+        carried no stats (an adopted foreign store, a log written
+        before stats were recorded) have their footers read
+        driver-side here instead.
 
-        Stock Spark pushes range predicates to parquet row groups but
-        still OPENS every file the partition-pruned listing names; on a
-        z-ordered store (``compact(zorder=...)``) the footers alone
-        rule most files out, so this plans a scan over the overlap set
-        only — the engine-level analog of Delta's stats-based file
-        skipping, built on ``parquet_rowgroup_stats`` (one footer read
-        per file, no data pages, embarrassingly parallel at 100k
-        files). Files with no usable stats for ``column`` are always
-        kept, and the stat compare is STRING-ordered (footer min/max
-        surface as strings) — order-preserving for the statement
-        schema's string and ISO-timestamp columns, the only supported
-        range/z dimensions here. Results are EXACTLY ``raw()`` filtered
-        to the range — pruning only removes files the predicate could
-        never match (pinned by test_zorder). The kept-file list is a
-        driver-side collect bounded by file COUNT (metadata-sized, the
-        same regime as the commit-log snapshot itself)."""
-        from ftm_lakehouse_spark.sources.parquet_meta import parquet_rowgroup_stats
-
+        Stats and bounds share one order-preserving string encoding
+        (sources/parquet_meta.py): strings as stored, timestamps as
+        fixed-width UTC ISO-8601 with microseconds. Bounds are read the
+        way Spark reads ``F.lit(bound)`` — a tz-aware ``datetime`` by
+        its UTC instant, a naive one in local time, a ``str`` on a
+        timestamp column in the session time zone. Keep-if-unknown: a
+        file without stats for ``column`` (every file, for ``value``
+        and the partition columns) is always read, and a bound with no
+        known encoding prunes nothing. Results are EXACTLY ``raw()``
+        filtered to the range (pinned by test_zorder)."""
         pred = F.col(column).between(F.lit(lo), F.lit(hi))
         if not self.commits.current_version():
             return self.raw().filter(pred)
+        stats = self.commits.snapshot_stats()
+        keep = list(stats)
+        tz = self.spark.conf.get("spark.sql.session.timeZone")
+        lo_s, hi_s = encode_bound(column, lo, tz), encode_bound(column, hi, tz)
+        if lo_s is not None and hi_s is not None:
+            stats |= self._footer_stats([f for f in keep if stats[f] is None])
+            keep = [f for f in keep if _overlaps(stats[f], column, lo_s, hi_s)]
+        if not keep:
+            return self.spark.createDataFrame([], STATEMENT_SCHEMA).filter(pred)
         data = self._data_path()
-        live = sorted(self.commits.snapshot())
-        paths = [self._fs.join(data, f) for f in live]
-        stats = (
-            parquet_rowgroup_stats(self.spark, paths, columns=[column])
-            .groupBy("file")
-            .agg(F.min("min_v").alias("lo_v"), F.max("max_v").alias("hi_v"))
-        )
-        lo_s, hi_s = str(lo), str(hi)
-        keep = stats.filter(
-            F.col("lo_v").isNull()
-            | F.col("hi_v").isNull()
-            | ((F.col("hi_v") >= F.lit(lo_s)) & (F.col("lo_v") <= F.lit(hi_s)))
-        )
-        kept_paths = [r["file"] for r in keep.select("file").collect()]
-        if not kept_paths:
-            return self.raw().filter(pred).limit(0)
-        return self._read_files(sorted(kept_paths)).filter(pred)
+        return self._read_files([self._fs.join(data, f) for f in keep]).filter(pred)
 
     def vacuum(self, retention_hours: float = 168.0) -> list[str]:
         """Reap physical garbage older than the retention window:
@@ -842,7 +859,8 @@ class StatementStore:
                 raise ValueError(
                     f"restore target {version} outside committed range 1..{head}"
                 )
-            target = set(self.commits.snapshot(version))
+            target_stats = self.commits.snapshot_stats(version)
+            target = set(target_stats)
             current = set(self.commits.snapshot(head))
             if target == current:
                 return {"restored": False, "version": head}
@@ -874,6 +892,7 @@ class StatementStore:
                 adds,
                 drops,
                 read_version=head,
+                stats=target_stats,
             )
             self.tags.touch("last_updated")
             return {

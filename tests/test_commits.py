@@ -348,3 +348,62 @@ def test_commit_jitter_uses_process_safe_entropy():
     src = inspect.getsource(commits_mod.CommitLog.commit)
     assert "_JITTER.random()" in src
     assert "random.random()" not in src
+
+
+def test_newest_snapshot_state_under_concurrent_commits(tmp_path):
+    """Threads commit and read through ONE CommitLog, whose newest
+    replayed snapshot is folded forward incrementally: every thread
+    reads exactly the state at its own commit, and the final state
+    equals a fresh replay — a lost or out-of-order state update breaks
+    one or the other."""
+    import sys
+    import threading
+
+    from ftm_lakehouse_spark.sources.commits import CommitLog
+    from ftm_lakehouse_spark.sources.fs import LocalFS
+
+    fs = LocalFS()
+    root = str(tmp_path / "log")
+    fs.mkdirs(root)
+    log = CommitLog(fs, root)
+    errors = []
+
+    def worker(w):
+        try:
+            for i in range(10):
+                f = f"w{w}-{i}.parquet"
+                v = log.commit("append", [("s",)], [f], stats={f: {"numRecords": i}})
+                snap = log.snapshot_stats(v)  # one file per commit
+                assert len(snap) == v and snap[f] == {"numRecords": i}
+        except Exception as exc:  # surfaced by the assert below
+            errors.append(exc)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=worker, args=(w,)) for w in range(6)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads) and not errors, errors
+    assert len(log.snapshot()) == 60
+    assert log.snapshot_stats() == CommitLog(fs, root).snapshot_stats()
+
+
+def test_snapshot_past_head_is_not_remembered_as_that_version(tmp_path):
+    from ftm_lakehouse_spark.sources.commits import CommitLog
+    from ftm_lakehouse_spark.sources.fs import LocalFS
+
+    fs = LocalFS()
+    root = str(tmp_path / "log")
+    fs.mkdirs(root)
+    log = CommitLog(fs, root)
+    log.commit("append", [("s",)], ["a.parquet"])
+    assert log.snapshot(5) == ["a.parquet"]  # replays to the head
+    for f in ("b", "c", "d", "e"):
+        log.commit("append", [("s",)], [f"{f}.parquet"])
+    assert log.snapshot(5) == CommitLog(fs, root).snapshot(5)
+    assert len(log.snapshot(5)) == 5

@@ -1,5 +1,6 @@
 import json
 
+import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 
@@ -33,6 +34,25 @@ def test_delta_log_export_is_a_readable_delta_snapshot(spark, lake_root):
     for a in adds:
         assert a["size"] == store._fs.filesize(store._fs.join(data, a["path"]))
         assert set(a["partitionValues"]) == {"shard", "bucket", "origin"}
+    # Delta stats come from the commit log and match the footers
+    for a in adds:
+        st = json.loads(a["stats"])
+        md = pq.read_metadata(store._fs.join(data, a["path"]))
+        assert st["numRecords"] == md.num_rows
+        col = {md.schema.column(i).name: i for i in range(md.num_columns)}
+        for name in ("entity_id", "first_seen"):
+            chunks = [
+                md.row_group(g).column(col[name]).statistics
+                for g in range(md.num_row_groups)
+            ]
+            lo, hi = min(c.min for c in chunks), max(c.max for c in chunks)
+            if name == "first_seen":
+                lo, hi = (v.strftime("%Y-%m-%dT%H:%M:%S.%fZ") for v in (lo, hi))
+            assert (st["minValues"][name], st["maxValues"][name]) == (lo, hi)
+        assert st["nullCount"]["deleted_at"] == sum(
+            md.row_group(g).column(col["deleted_at"]).statistics.null_count
+            for g in range(md.num_row_groups)
+        )
     # a generic Delta reader reconstructs the table from the log alone:
     # reading exactly the add paths reproduces store.raw()
     paths = [store._fs.join(data, a["path"]) for a in adds]
@@ -658,3 +678,16 @@ def test_checkpoint_metadata_mirrors_json_action(spark, lake_root):
     assert m["format"]["provider"] == "parquet"
     assert m["format"]["options"] == []
     assert m["partitionColumns"] == ["shard", "bucket", "origin"]
+    # the checkpoint's add rows carry the same stats and sizes as the
+    # JSON adds
+    json_adds = {
+        a["add"]["path"]: a["add"]
+        for v in range(4)
+        for a in map(json.loads, open(os.path.join(log_dir, f"{v:020d}.json")))
+        if "add" in a
+    }
+    cp_adds = [a for a in tbl.column("add").to_pylist() if a]
+    assert cp_adds and {a["path"] for a in cp_adds} == set(json_adds)
+    for a in cp_adds:
+        assert a["stats"] == json_adds[a["path"]]["stats"]
+        assert a["size"] == json_adds[a["path"]]["size"]

@@ -71,3 +71,13 @@ def test_str_array_matches(spark):
     vals = list(ADVERSARIAL) + list(ADVERSARIAL.values())
     assert _one(spark, lit_str_array(vals)) == vals
     assert _one(spark, lit_str_array([])) == []
+
+
+def test_empty_map_fallbacks_keep_their_types(spark):
+    df = spark.range(1).select(
+        lit_str_map({}).alias("s"), lit_str_array_map({}).alias("a"),
+        lit_str_int_map({}).alias("i"),
+    )
+    assert [f.dataType.simpleString() for f in df.schema.fields] == [
+        "map<string,string>", "map<string,array<string>>", "map<string,int>"
+    ]

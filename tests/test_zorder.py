@@ -1,10 +1,11 @@
 """Z-order compaction + stats-based file pruning (Delta OPTIMIZE
 ZORDER analog, functions/zorder.py + StatementStore.compact(zorder=) +
-StatementStore.scan_range).
+StatementStore.scan_range, which prunes from the per-file min/max
+stats in the commit log).
 
 The pin that matters: after ``compact(zorder=("entity_id",
 "first_seen"))`` a narrow ``first_seen`` range scan PLANS a strict
-subset of the store's files (footer min/max pruning has something to
+subset of the store's files (min/max pruning has something to
 bite on), while the default entity-sorted layout — where every file
 spans the full time range — plans essentially all of them. Both layouts
 must return byte-identical results to an unpruned ``raw()`` filter:
@@ -41,6 +42,20 @@ def _build_store(spark, root, *, n_entities=120, n_days=64):
             )
     ds.store.append(make_df(spark, rows))
     return ds
+
+
+def _ids(df):
+    return sorted(r["id"] for r in df.select("id").collect())
+
+
+def _jobs_fired(spark, fn):
+    """(result, Spark jobs submitted while ``fn`` ran) — read from the
+    DAG scheduler's job-id counter, which advances synchronously on
+    submit (the status store fills in asynchronously)."""
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    before = dag.nextJobId()
+    out = fn()
+    return out, dag.nextJobId() - before
 
 
 def test_zorder_key_interleaves_rank_buckets(spark):
@@ -87,8 +102,17 @@ def test_compact_zorder_prunes_time_range_files(spark, tmp_path):
     # z-order rewrite: (entity, time) Morton clustering
     done = store.compact(zorder=("entity_id", "first_seen"))
     assert done  # every multi-file partition rewritten
+    # the rewrite's record carries each new file's stats
+    rec = store.commits.read()[-1]
+    assert set(rec["stats"]) == set(rec["files_added"])
+    st = rec["stats"][rec["files_added"][0]]
+    assert st["numRecords"] > 0 and st["size"] > 0
+    assert st["minValues"]["first_seen"].endswith("Z")
+    assert "value" not in st["minValues"] and "shard" not in st["minValues"]
     total = len(store.commits.snapshot())
-    zscan = store.scan_range("first_seen", lo, hi)
+    # planning is a log lookup: no Spark job before the action
+    zscan, jobs = _jobs_fired(spark, lambda: store.scan_range("first_seen", lo, hi))
+    assert jobs == 0
     kept = len(zscan.inputFiles())
     assert sorted(r["id"] for r in zscan.select("id").collect()) == expected
     # the whole point: the narrow window PLANS a strict subset of files
@@ -127,3 +151,100 @@ def test_zorder_rewrite_preserves_content_and_log(spark, tmp_path):
     # time travel to the pre-rewrite version still works (files retired,
     # not deleted, until vacuum)
     assert store.raw(as_of=v0).count() == len(before)
+
+
+# ------------------------------------------------ log-resident stats
+
+
+def test_scan_range_normalizes_tz_aware_bounds_to_utc(spark, tmp_path):
+    """A +02:00 window [03:30, 06:00] is [01:30Z, 04:00Z]: s1 at 01:45Z
+    sits in a file whose max (01:45Z) sorts below the window's lower
+    bound when ``str()`` forms of mixed-offset datetimes are compared."""
+    from datetime import datetime, timedelta, timezone
+
+    from ftm_lakehouse_spark.lakehouse import Lakehouse
+
+    store = Lakehouse(spark, str(tmp_path / "lake")).dataset("tz", shards=2).store
+    rows = [
+        stmt(id=i, entity_id=f"e{i}", first_seen=t, last_seen=t, shard=sh)
+        for i, t, sh in (
+            ("s0", "2024-01-01T00:00:00", "0"),
+            ("s1", "2024-01-01T01:45:00", "0"),
+            ("s2", "2024-01-01T03:00:00", "1"),
+        )
+    ]
+    store.append(make_df(spark, rows))
+    plus2 = timezone(timedelta(hours=2))
+    lo = datetime(2024, 1, 1, 3, 30, tzinfo=plus2)
+    hi = datetime(2024, 1, 1, 6, 0, tzinfo=plus2)
+    want = _ids(store.raw().filter(F.col("first_seen").between(F.lit(lo), F.lit(hi))))
+    assert want == ["s1", "s2"]
+    assert _ids(store.scan_range("first_seen", lo, hi)) == want
+    # a naive datetime and a string bound read exactly as Spark reads
+    # the same literal
+    for nlo, nhi in (
+        (datetime(2024, 1, 1, 1, 30), datetime(2024, 1, 1, 4, 0)),
+        ("2024-01-01 01:30:00", "2024-01-01 04:00:00"),
+        ("2024-01-01T03:30:00+02:00", "2024-01-01T06:00:00+02:00"),
+    ):
+        pred = F.col("first_seen").between(F.lit(nlo), F.lit(nhi))
+        assert _ids(store.scan_range("first_seen", nlo, nhi)) == _ids(
+            store.raw().filter(pred)
+        ), (nlo, nhi)
+
+
+def test_stats_survive_checkpoint_fold_cleanup_and_restore(spark, tmp_path, monkeypatch):
+    from ftm_lakehouse_spark.sources import commits
+
+    monkeypatch.setattr(commits, "CHECKPOINT_INTERVAL", 3)
+    ds = _build_store(spark, str(tmp_path / "lake"), n_entities=40, n_days=8)
+    store = ds.store
+    v1_stats = store.commits.snapshot_stats(1)
+    store.compact(zorder=("entity_id", "first_seen"))
+    assert store.restore(1)["restored"]  # metadata-only: re-adds v1 files
+    restored = store.commits.read()[-1]
+    assert restored["stats"] == {f: v1_stats[f] for f in restored["files_added"]}
+    store.compact(zorder=("entity_id", "first_seen"))
+    store.append(make_df(spark, [stmt(id="late", entity_id="e9999", shard="1")]))
+    assert store.commits.current_version() > commits.CHECKPOINT_INTERVAL
+    # the log's incrementally folded newest state == a fresh replay
+    fresh = commits.CommitLog(store._fs, store.commits.root)
+    assert store.commits.snapshot_stats() == fresh.snapshot_stats()
+    store.vacuum(retention_hours=0)
+    assert store.commits.oldest_version() > 1  # records folded away
+    stats = store.commits.snapshot_stats()
+    assert list(stats) == store.commits.snapshot()
+    assert all(stats.values())
+    lo, hi = ts("2024-01-02T00:00:00"), ts("2024-01-04T00:00:00")
+    scan, jobs = _jobs_fired(spark, lambda: store.scan_range("first_seen", lo, hi))
+    assert jobs == 0
+    pred = F.col("first_seen").between(F.lit(lo), F.lit(hi))
+    assert _ids(scan) == _ids(store.raw().filter(pred))
+
+
+def test_scan_range_falls_back_to_footers_for_pre_stats_logs(spark, tmp_path):
+    import json
+    import os
+
+    from ftm_lakehouse_spark.sources.statement_store import StatementStore
+
+    ds = _build_store(spark, str(tmp_path / "lake"))
+    store = ds.store
+    store.compact(zorder=("entity_id", "first_seen"))
+    store.commits._write_checkpoint(store.commits.current_version())
+    # a log written before stats were recorded: no record or
+    # checkpoint carries any
+    for name in os.listdir(store.commits.root):
+        path = os.path.join(store.commits.root, name)
+        doc = json.load(open(path))
+        assert doc.pop("stats")
+        json.dump(doc, open(path, "w"))
+    store = StatementStore(spark, store.path, store.config)  # a fresh reader
+    assert not any(store.commits.snapshot_stats().values())
+    lo, hi = ts("2024-01-08T00:00:00"), ts("2024-01-14T00:00:00")
+    pred = F.col("first_seen").between(F.lit(lo), F.lit(hi))
+    want = store.raw().filter(pred).orderBy("id").collect()
+    scan, jobs = _jobs_fired(spark, lambda: store.scan_range("first_seen", lo, hi))
+    assert jobs == 0  # footers are read driver-side
+    assert scan.orderBy("id").collect() == want
+    assert len(scan.inputFiles()) < len(store.commits.snapshot())

@@ -70,9 +70,6 @@ def main() -> None:
         mine.sort(key=lambda s: -(s.get("executorRunTime") or 0))
         print("  -- stages by executor run time (top 14) --")
         for s in mine[:14]:
-            dur = ""
-            if s.get("firstTaskLaunchedTime") and s.get("completionTime"):
-                pass
             print(
                 f"  stage {s['stageId']:>4} tasks={s['numCompleteTasks']:>4}"
                 f" run={s.get('executorRunTime',0)/1e3:7.2f}s"
