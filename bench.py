@@ -11,7 +11,8 @@ comparable — and ``warm`` carries the median of $SPARK_GRAFT_BENCH_WARM
 (default 3) subsequent runs, the contention-robust number rounds should
 compare (cold runs pay codegen + Python-worker startup and swing
 ±30-50% with host contention; see SCALE.md §6d). Both dicts land in
-the full-precision ``BENCH_LOCAL_r{N}.json`` artifact; the byte-capped
+the full-precision ``BENCH_LOCAL_r{N}.json`` artifact (``BENCH_LOCAL.json``
+when ``SPARK_GRAFT_ROUND`` is unset); the byte-capped
 STDOUT line the driver records carries the WARM medians (labeled
 ``queries_are``) since round 9, so geomeans are computable from driver
 artifacts alone.
@@ -445,10 +446,12 @@ def main() -> None:
         if vs_prev:
             out["vs_prev"] = vs_prev
     # One canonical committed full-precision artifact per round
-    # (round-9, VERDICT r8 item 7: retires the BENCH_LOCAL.json /
-    # BENCH_LOCAL_r0N.json split — the suffixed name IS the live file).
-    rnd = os.environ.get("SPARK_GRAFT_ROUND", "12")
-    local_name = f"BENCH_LOCAL_{tag}_r{rnd}.json" if tag else f"BENCH_LOCAL_r{rnd}.json"
+    # (round-9, VERDICT r8 item 7: the suffixed name IS the live file).
+    # A run with no round set writes the unsuffixed (git-ignored) name,
+    # so it never overwrites a committed round's artifact.
+    rnd = os.environ.get("SPARK_GRAFT_ROUND")
+    parts = ["BENCH_LOCAL", tag, f"r{rnd}" if rnd else ""]
+    local_name = "_".join(p for p in parts if p) + ".json"
     with open(os.path.join(here, local_name), "w") as fh:
         fh.write(json.dumps(out) + "\n")
     spark.stop()

@@ -22,9 +22,9 @@ whole-stage codegen):
   bucket holds ~1/256th of the DATA, not of the value range.
 * string dimension → ``pmod(xxhash64(col), 2**bits)``. Hashing keeps
   one distinct value in one bucket (equality predicates skip through
-  bloom filters + the z-locality), at the cost of range predicates on
-  that dimension — the same trade Delta makes for high-cardinality
-  string z-columns.
+  dictionary or bloom filtering + the z-locality), at the cost of
+  range predicates on that dimension — the same trade Delta makes for
+  high-cardinality string z-columns.
 * interleave: bit i of dimension d lands at position ``i*ndims + d``
   of the z-value — the classic Morton construction, unrolled into a
   compile-time chain of shift/and/or expressions (``bits × ndims``

@@ -300,6 +300,7 @@ class CommitLog:
         read_version: int | None = None,
         txn: tuple[str, int] | None = None,
         stats: dict[str, dict | None] | None = None,
+        canonical: bool = True,
     ) -> int | None:
         """Atomically publish one write job; returns the version won.
 
@@ -311,6 +312,9 @@ class CommitLog:
         was computed from — the dirty check compares append versions
         against it. Raises :class:`CommitConflict` if a concurrent
         rewrite already retired any of ``files_removed``.
+        ``canonical=False`` marks a rewrite that copies rows without
+        canonicalizing them (compaction): it does not clear its
+        partitions' dirty marks.
 
         ``txn`` = (app_id, txn_version): idempotent-writer fencing,
         Delta's ``txnAppId``/``txnVersion`` contract. If a commit from
@@ -333,6 +337,8 @@ class CommitLog:
             record["read_version"] = read_version
         if txn is not None:
             record["txn"] = [txn[0], int(txn[1])]
+        if not canonical:
+            record["canonical"] = False
         stats = {f: stats[f] for f in record["files_added"] if (stats or {}).get(f)}
         if stats:
             record["stats"] = stats
@@ -435,7 +441,10 @@ class CommitLog:
 
     @staticmethod
     def _fold_dirty(rec: dict, cleared: dict, appended: dict) -> None:
-        if rec["kind"] == "rewrite":
+        # only a canonicalizing rewrite (merge) clears dirtiness; a
+        # compaction (``canonical: false``) copies rows as they are, so
+        # a delete or append it swept up still needs its merge
+        if rec["kind"] == "rewrite" and rec.get("canonical", True):
             rv = rec.get("read_version", rec["version"])
             for p in rec["partitions"]:
                 key = "/".join(p)

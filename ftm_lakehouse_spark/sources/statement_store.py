@@ -449,7 +449,6 @@ class StatementStore:
         self,
         df: DataFrame,
         txn: tuple[str, int] | None = None,
-        materialize: bool = False,
         streaming: bool = False,
     ) -> None:
         """Lock-free blind append: stage-move + one atomic commit.
@@ -463,15 +462,13 @@ class StatementStore:
         exactly-once one (streaming/journal.py passes its checkpoint
         identity + epoch here).
 
-        ``materialize`` is accepted for compatibility and ignored: the
-        single-pass ``_stage_move`` (round-12, guide §1.2) executes the
-        input plan exactly ONCE — in the stage write job — so there is
-        no second pass left to protect with an eager checkpoint. The
-        write job also consumes every input partition, the contract a
-        streaming foreachBatch sink needs even for an empty batch
-        (state-store commit validation); an empty batch touches
-        ``last_updated`` (the append RAN — the pre-r12 contract for
-        freshness consumers, ADVICE r12) but not the log.
+        The single-pass ``_stage_move`` executes the input plan exactly
+        ONCE, in the stage write job, which also consumes every input
+        partition — the contract a streaming foreachBatch sink needs
+        even for an empty batch (state-store commit validation); an
+        empty batch touches ``last_updated`` (the append RAN — the
+        pre-r12 contract for freshness consumers, ADVICE r12) but not
+        the log.
 
         ``streaming=True`` (the journal sink sets it) routes the write
         clustering to the fixed-fanout path: stateful micro-batches run
@@ -506,10 +503,22 @@ class StatementStore:
 
     @staticmethod
     def _write_options(large: bool = False) -> dict[str, str]:
-        """Parquet bloom filters on the point-lookup keys: with files
-        clustered by entity_id, min/max stats skip most files and the
-        bloom filter kills the rest without decoding pages (the engine's
-        substitute for Delta ZORDER on lookups).
+        """Parquet writer options for every statement file: append,
+        merge/compact rewrite and streaming batches alike.
+
+        Point lookups skip files by the ``entity_id`` min/max stats
+        (files are clustered by entity_id), and inside a file by the
+        column's dictionary: while a chunk stays dictionary-encoded
+        (up to tens of thousands of ids per row group), Spark's
+        dictionary filtering drops the row group without decoding data
+        pages. Parquet writes no bloom filter for a fully
+        dictionary-encoded chunk, so at that size the ``entity_id``
+        filter costs nothing. ``parquet.bloom.filter.adaptive.enabled``
+        (a global key: the per-column form is ignored) writes it only
+        once a chunk leaves dictionary encoding, sized 64 KB-1 MB to
+        the ids the chunk actually holds; an explicit
+        ``expected.ndv`` would override that sizing, so none is set.
+        No reader filters statements by ``id``, so it gets no filter.
 
         Two writer profiles (reference ``writer_for_bucket``, small vs
         large): document-family buckets hold multi-KB ``value`` strings
@@ -521,8 +530,7 @@ class StatementStore:
         merge/query path), 128 MB row groups, default dictionaries."""
         base = {
             "parquet.bloom.filter.enabled#entity_id": "true",
-            "parquet.bloom.filter.expected.ndv#entity_id": "1000000",
-            "parquet.bloom.filter.enabled#id": "true",
+            "parquet.bloom.filter.adaptive.enabled": "true",
         }
         if large:
             base |= {
@@ -588,6 +596,7 @@ class StatementStore:
         files_removed: list[str] | None = None,
         read_version: int | None = None,
         zorder: tuple[str, ...] | None = None,
+        canonical: bool = True,
     ) -> None:
         """Partition-scoped rewrite (merge / Delta ``replaceWhere``
         analog, reference S4 storage/parquet.py:644-663): new files
@@ -604,7 +613,11 @@ class StatementStore:
         retired any target file; the staged output then stays on disk
         untracked (never visible) until vacuum. Old files are deleted
         by ``vacuum`` after retention, which is what keeps ``as_of``
-        time travel readable."""
+        time travel readable.
+
+        ``canonical=False`` (compaction) records that the rows were
+        copied, not canonicalized: the rewritten partitions keep any
+        pending merge (``CommitLog._fold_dirty``)."""
         self._ensure_bootstrap()
         if read_version is None:
             read_version = self.commits.current_version()
@@ -626,6 +639,7 @@ class StatementStore:
             sorted(files_removed),
             read_version=read_version,
             stats=added,
+            canonical=canonical,
         )
 
     # ---------------------------------------------------- maintenance
@@ -730,6 +744,7 @@ class StatementStore:
                 files_removed=target,
                 read_version=head,
                 zorder=tuple(zorder) if zorder else None,
+                canonical=False,
             )
         return crowded
 

@@ -407,3 +407,30 @@ def test_snapshot_past_head_is_not_remembered_as_that_version(tmp_path):
         log.commit("append", [("s",)], [f"{f}.parquet"])
     assert log.snapshot(5) == CommitLog(fs, root).snapshot(5)
     assert len(log.snapshot(5)) == 5
+
+
+def test_only_canonical_rewrites_clear_dirty_partitions(tmp_path, monkeypatch):
+    """A compaction record (``canonical: false``) leaves its partitions
+    dirty; a merge record clears them — replayed from records and from
+    a checkpoint alike."""
+    from ftm_lakehouse_spark.sources import commits as commits_mod
+    from ftm_lakehouse_spark.sources.commits import CommitLog
+    from ftm_lakehouse_spark.sources.fs import LocalFS
+
+    monkeypatch.setattr(commits_mod, "CHECKPOINT_INTERVAL", 3)
+    fs = LocalFS()
+    root = str(tmp_path / "log")
+    fs.mkdirs(root)
+    log = CommitLog(fs, root)
+    p = ("0", "thing", "x")
+    log.commit("append", [p], ["a.parquet"])
+    log.commit("rewrite", [p], ["b.parquet"], ["a.parquet"], read_version=1,
+               canonical=False)
+    assert log.read(1)[-1]["canonical"] is False
+    assert log.dirty_partitions() == [p]
+    log.commit("append", [("1", "thing", "x")], ["c.parquet"])  # checkpoint 3
+    assert fs.exists(log._checkpoint_path(3))
+    assert CommitLog(fs, root).dirty_partitions() == [p, ("1", "thing", "x")]
+    log.commit("rewrite", [p], ["d.parquet"], ["b.parquet"], read_version=3)
+    assert "canonical" not in log.read(3)[-1]
+    assert log.dirty_partitions() == [("1", "thing", "x")]

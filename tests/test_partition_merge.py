@@ -119,3 +119,65 @@ def test_concurrent_appends_both_land(spark, lake_root):
     assert not errs
     assert ds.count() == 2
     assert len(ds.store.dirty_partitions()) == 3
+
+
+def _people(spark, ids, name="N"):
+    return spark.createDataFrame(
+        [
+            {"id": i, "schema": "Person", "properties": {"name": [f"{name}{i}"]}}
+            for i in ids
+        ]
+    )
+
+
+def test_compact_keeps_a_pending_merge(spark, lake_root):
+    """Compaction copies rows without canonicalizing them, so a delete
+    it sweeps up must stay dirty until a merge reaps the entity."""
+    ds = Lakehouse(spark, lake_root).dataset("pm6", shards=2)
+    ds.write_entities(_people(spark, [f"p{i:02d}" for i in range(20)]))
+    assert ds.merge()
+    ds.delete_entity("p07")
+    dirty = ds.store.dirty_partitions()
+    assert len(dirty) == 1
+
+    assert ds.store.compact(max_files_per_partition=1) == dirty
+    assert ds.store.dirty_partitions() == dirty
+    rec = ds.store.commits.read(0)[-1]
+    assert rec["kind"] == "rewrite" and rec["canonical"] is False
+
+    assert ds.merge()
+    assert ds.store.dirty_partitions() == []
+    assert ds.get("p07") is None and ds.get("p08") is not None
+    assert ds.count() == 19
+
+
+def test_append_between_optimize_merge_and_compact_stays_dirty(
+    spark, lake_root, monkeypatch
+):
+    """``Dataset.optimize`` merges, then compacts (here z-ordered, which
+    rewrites every partition). An append landing between the two is
+    swept into the compaction's output but was never merged, so its
+    partition must still be dirty afterwards."""
+    ds = Lakehouse(spark, lake_root).dataset("pm7", shards=2)
+    ids = [f"p{i:02d}" for i in range(20)]
+    ds.write_entities(_people(spark, ids))
+    ds.write_entities(_people(spark, ids[:10], name="M"))
+    merge = ds.merge
+
+    def merge_then_append(**kw):
+        done = merge(**kw)
+        ds.write_entities(_people(spark, ["p03"], name="late"))
+        return done
+
+    monkeypatch.setattr(ds, "merge", merge_then_append)
+    ds.optimize(zorder=("entity_id",))
+    monkeypatch.undo()
+
+    dirty = ds.store.dirty_partitions()
+    assert len(dirty) == 1
+    compaction = ds.store.commits.read(0)[-1]
+    assert compaction["kind"] == "rewrite" and compaction["canonical"] is False
+    assert list(dirty[0]) in compaction["partitions"]
+    assert ds.merge()
+    assert ds.store.dirty_partitions() == []
+    assert ds.count() == 20
