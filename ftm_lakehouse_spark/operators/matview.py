@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ftm_lakehouse_spark.model.statement import PARTITION_COLUMNS, STATEMENT_SCHEMA
+from ftm_lakehouse_spark.sources.commits import _partition_of
 
 __all__ = ["IncrementalAggregate", "partial_aggregate", "merge_partials", "fold_partitions"]
 
@@ -254,9 +255,3 @@ class IncrementalAggregate:
     def read(self) -> DataFrame:
         """The aggregate, partitions folded out: |keys|-grained rows."""
         return fold_partitions(self._state_df(), self.keys, self.sums)
-
-
-def _partition_of(rel_file: str) -> tuple[str, ...]:
-    return tuple(
-        seg.split("=", 1)[1] for seg in rel_file.split("/")[:-1] if "=" in seg
-    )

@@ -1,6 +1,6 @@
 """Materialization policy — SCALE.md §8 (round-4 VERDICT item 6).
 
-One knob, two classes:
+Two classes:
 
 * **data-sized** (``DATA_SIZED``): a lineage cut whose row count scales
   with the corpus — collapsed texts, shingle/signature tables, edge
@@ -8,16 +8,13 @@ One knob, two classes:
   be cached as deserialized JVM objects: at scale the deserialized
   form is 2–5× the on-disk size and competes for the same unified
   memory as the shuffles/joins that CONSUME the materialization — the
-  sf10 pagerank OOM (round 4), generalized. Default is ``DISK_ONLY``:
+  sf10 pagerank OOM (round 4), generalized. They are ``DISK_ONLY``:
   a round-6 three-way A/B at sf0.1 (SCALE.md §8) measured DISK_ONLY
   within noise of — mostly faster than — the deserialized default on
   every affected gate (local-disk re-reads are sequential and
   page-cached), while the Java-serializer middle ground
   (``MEMORY_AND_DISK`` serialized) was the slowest of the three
   (UnsafeRow batches pay serializer CPU without saving the copies).
-  Set ``SPARK_GRAFT_CKPT_LEVEL=MEMORY_AND_DISK_SER`` or ``DEFAULT``
-  to override for hardware where the trade is different (e.g. slow
-  spinning disks + huge RAM).
 * **bounded** — vocab/k/#partitions/micro-batch-sized tables and
   per-round iterative states: those sites simply call
   ``localCheckpoint()`` with no level (Spark's memory default) and do
@@ -31,19 +28,7 @@ memory pressure there is the measured OOM driver.
 
 from __future__ import annotations
 
-import os
-
 from pyspark import StorageLevel
 
-_LEVELS = {
-    # PySpark's MEMORY_AND_DISK constant IS the serialized variant
-    # (deserialized=False); the deserialized default is *_DESER
-    "MEMORY_AND_DISK_SER": StorageLevel.MEMORY_AND_DISK,
-    "DISK_ONLY": StorageLevel.DISK_ONLY,
-    "DEFAULT": None,  # Spark's localCheckpoint default (deserialized)
-}
-
-#: storage level for DATA-SIZED lineage cuts (None = Spark default)
-DATA_SIZED: StorageLevel | None = _LEVELS[
-    os.environ.get("SPARK_GRAFT_CKPT_LEVEL", "DISK_ONLY")
-]
+#: storage level for DATA-SIZED lineage cuts
+DATA_SIZED = StorageLevel.DISK_ONLY

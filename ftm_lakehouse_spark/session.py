@@ -23,13 +23,78 @@ def _cpus() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
+#: Runtime-settable SQL conf the engine needs, applied by both
+#: :func:`get_spark` and :func:`tune_for_local` (shuffle partitions are
+#: sized per call, from :func:`_cpus`).
+_RUNTIME_CONF = {
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    # Broadcast budget: explicit hints are reserved for
+    # cardinality-BOUNDED tables (see j_multiway_star's policy);
+    # data-sized dims rely on the size thresholds. The STATIC
+    # threshold stays at Spark's conservative default — Catalyst's
+    # pre-execution size estimates above aggregates are unreliable
+    # upward (measured: a 64m static threshold broadcast a 1 GB
+    # post-aggregate fingerprint table at sf10 and blew
+    # spark.driver.maxResultSize). The ADAPTIVE threshold is a
+    # better-informed decision: AQE re-plans from the ACTUAL size
+    # of materialized shuffle stages, extending the broadcast
+    # regime to post-aggregate sides the static planner cannot
+    # trust — e.g. Q3's orderkey-collapsed lineitem at sf100. It
+    # is NOT a complete guarantee: a join side whose subtree puts
+    # a Project/Generate ABOVE the measured exchange is still
+    # costed by schema-width guesses (SCALE.md §12 defect 5), so
+    # operators whose streamed side must never build pin it by
+    # JOIN TYPE (outer probe), not by threshold. 64 MB is
+    # executor-memory-bounded (one hashed relation per task slot
+    # at 16g heap).
+    "spark.sql.adaptive.autoBroadcastJoinThreshold": "64m",
+    # Runtime Bloom-filter join pruning (on by default) keeps its
+    # conservative creation caps (10 MB / 4M keys). Raising them
+    # (512MB / 32M keys, so Q10's 12M date-filtered orderkeys
+    # could bloom-prune the 150M-row returned-lineitem shuffle)
+    # measured NEUTRAL-TO-NEGATIVE in a controlled solo A/B at
+    # sf100 (19.7s off vs 21.1s on): on one box the shuffle the
+    # bloom saves is page-cache-local, so the extra key-aggregate
+    # pass over orders costs more than it saves. On a real cluster
+    # with network shuffle the trade likely flips — revisit with a
+    # multi-node measurement, per-job via SPARK_GRAFT_CONF, rather
+    # than as an unmeasurable default here.
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
+    "spark.sql.sources.partitionOverwriteMode": "dynamic",
+    "spark.sql.parquet.compression.codec": "zstd",
+    # modern parquet timestamps (µs int64) instead of legacy INT96:
+    # INT96 columns carry NO min/max statistics, which blinds every
+    # footer-stat consumer (scan_range pruning, z-order clustering,
+    # row-group skipping on time predicates) and is refused by
+    # strict Delta/Iceberg readers
+    "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
+    # RocksDB state store (bundled since Spark 3.2) as the engine
+    # default: streaming dedup/session state lives off-heap on
+    # disk instead of in the HDFS-backed ON-HEAP map, whose two
+    # retained versions OOM'd the 16g heap at sf100 (33M dedup
+    # keys, pipeline_streaming_ingest — round-7 decade defect #3).
+    # At cluster scale this is the standard choice for any
+    # state larger than a few GB per executor.
+    "spark.sql.streaming.stateStore.providerClass": (
+        "org.apache.spark.sql.execution.streaming.state."
+        "RocksDBStateStoreProvider"
+    ),
+}
+
+
 def get_spark(
     app_name: str = "ftm_lakehouse_spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or reuse) a SparkSession with the engine's required conf.
+    """Build (or reuse) a SparkSession with the engine's required conf
+    (:data:`_RUNTIME_CONF` plus the static keys only a builder can set).
 
     Required semantics:
       * ``spark.sql.session.timeZone=UTC`` — all engine timestamps are
@@ -42,69 +107,13 @@ def get_spark(
         analog of Delta ``replaceWhere``.
     """
     cpus = _cpus()
+    builder = SparkSession.builder.appName(app_name)
+    for k, v in _RUNTIME_CONF.items():
+        builder = builder.config(k, v)
     builder = (
-        SparkSession.builder.appName(app_name)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
+        builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         .config("spark.default.parallelism", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # Broadcast budget: explicit hints are reserved for
-        # cardinality-BOUNDED tables (see j_multiway_star's policy);
-        # data-sized dims rely on the size thresholds. The STATIC
-        # threshold stays at Spark's conservative default — Catalyst's
-        # pre-execution size estimates above aggregates are unreliable
-        # upward (measured: a 64m static threshold broadcast a 1 GB
-        # post-aggregate fingerprint table at sf10 and blew
-        # spark.driver.maxResultSize). The ADAPTIVE threshold is a
-        # better-informed decision: AQE re-plans from the ACTUAL size
-        # of materialized shuffle stages, extending the broadcast
-        # regime to post-aggregate sides the static planner cannot
-        # trust — e.g. Q3's orderkey-collapsed lineitem at sf100. It
-        # is NOT a complete guarantee: a join side whose subtree puts
-        # a Project/Generate ABOVE the measured exchange is still
-        # costed by schema-width guesses (SCALE.md §12 defect 5), so
-        # operators whose streamed side must never build pin it by
-        # JOIN TYPE (outer probe), not by threshold. 64 MB is
-        # executor-memory-bounded (one hashed relation per task slot
-        # at 16g heap).
-        .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "64m")
-        # Runtime Bloom-filter join pruning (on by default) keeps its
-        # conservative creation caps (10 MB / 4M keys). Raising them
-        # (512MB / 32M keys, so Q10's 12M date-filtered orderkeys
-        # could bloom-prune the 150M-row returned-lineitem shuffle)
-        # measured NEUTRAL-TO-NEGATIVE in a controlled solo A/B at
-        # sf100 (19.7s off vs 21.1s on): on one box the shuffle the
-        # bloom saves is page-cache-local, so the extra key-aggregate
-        # pass over orders costs more than it saves. On a real cluster
-        # with network shuffle the trade likely flips — revisit with a
-        # multi-node measurement, per-job via SPARK_GRAFT_CONF, rather
-        # than as an unmeasurable default here.
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-        .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        .config("spark.sql.parquet.compression.codec", "zstd")
-        # modern parquet timestamps (µs int64) instead of legacy INT96:
-        # INT96 columns carry NO min/max statistics, which blinds every
-        # footer-stat consumer (scan_range pruning, z-order clustering,
-        # row-group skipping on time predicates) and is refused by
-        # strict Delta/Iceberg readers
-        .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-        # RocksDB state store (bundled since Spark 3.2) as the engine
-        # default: streaming dedup/session state lives off-heap on
-        # disk instead of in the HDFS-backed ON-HEAP map, whose two
-        # retained versions OOM'd the 16g heap at sf100 (33M dedup
-        # keys, pipeline_streaming_ingest — round-7 decade defect #3).
-        # At cluster scale this is the standard choice for any
-        # state larger than a few GB per executor.
-        .config(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
         .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
     )
     if master is not None:
@@ -135,22 +144,7 @@ def get_spark(
 def tune_for_local(spark: SparkSession) -> SparkSession:
     """Re-apply runtime-settable conf on a session we did not create
     (e.g. the driver-provided one in ``__spark_entry__.entry``)."""
-    rt = {
-        "spark.sql.session.timeZone": "UTC",
-        "spark.sql.adaptive.enabled": "true",
-        "spark.sql.adaptive.coalescePartitions.enabled": "true",
-        "spark.sql.adaptive.skewJoin.enabled": "true",
-        "spark.sql.adaptive.autoBroadcastJoinThreshold": "64m",
-        "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
-        "spark.sql.shuffle.partitions": str(_cpus()),
-        "spark.sql.sources.partitionOverwriteMode": "dynamic",
-        "spark.sql.legacy.parquet.nanosAsLong": "true",
-        "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
-        "spark.sql.streaming.stateStore.providerClass": (
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider"
-        ),
-    }
+    rt = {**_RUNTIME_CONF, "spark.sql.shuffle.partitions": str(_cpus())}
     for k, v in rt.items():
         try:
             spark.conf.set(k, v)

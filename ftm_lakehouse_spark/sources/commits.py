@@ -34,12 +34,12 @@ provides the same contract from first principles:
     file to its footer stats (rows, bytes, null counts, min/max — see
     sources/parquet_meta.py), so file skipping is a log lookup
     (:meth:`CommitLog.snapshot_stats`), Delta's ``add.stats``.
-  * **Checkpoints.** Every ``CHECKPOINT_INTERVAL`` commits the full
-    live file set (and its stats) is folded into
-    ``checkpoint-{version}.json`` so a snapshot replays O(interval)
-    records, not O(history) — the log never becomes the read
-    bottleneck at 100 TB commit counts. A log object keeps its newest
-    replayed snapshot and folds only later records onto it.
+  * **One state, checkpointed.** Snapshots, stats, txn watermarks
+    and dirty partitions all read one replayed protocol state
+    (:meth:`CommitLog._state`); every ``CHECKPOINT_INTERVAL`` commits
+    that state is written down as ``checkpoint-{version}.json``, so a
+    replay reads O(interval) records, not O(history). A log object
+    keeps its newest state and folds only later records onto it.
   * **Time travel.** ``snapshot(version=N)`` resolves the table as of
     commit N for as long as retired files remain un-vacuumed
     (StatementStore.vacuum applies the retention).
@@ -78,6 +78,14 @@ CHECKPOINT_INTERVAL = 20
 #: OTHER writer committed, so 64 lost races implies pathological
 #: contention worth surfacing, not spinning through)
 MAX_COMMIT_ATTEMPTS = 64
+
+
+def _partition_of(rel_file: str) -> tuple[str, ...]:
+    """``shard=0/bucket=a/origin=x/part-...parquet`` → ``(0, a, x)``:
+    the partition values of a data-dir-relative file name."""
+    return tuple(
+        seg.split("=", 1)[1] for seg in rel_file.split("/")[:-1] if "=" in seg
+    )
 
 
 class CommitConflict(RuntimeError):
@@ -196,12 +204,12 @@ class CommitLog:
         #: payload unique so the non-atomic-store read-back fence can
         #: tell WHOSE bytes actually landed
         self._writer = f"{os.getpid()}-{uuid.uuid4().hex[:12]}"
-        #: (version, live files, stats) of the newest snapshot replayed.
-        #: Published records never change, so a later snapshot folds
-        #: only the records after it instead of re-reading every record
-        #: since the checkpoint (which, carrying per-file stats, are
-        #: tens of KB each). Replaced, never mutated.
-        self._newest: tuple[int, set[str], dict[str, dict]] | None = None
+        #: the newest protocol state replayed (:meth:`_state`).
+        #: Published records never change, so a later state folds only
+        #: the records after it instead of re-reading every record since
+        #: the checkpoint (which, carrying per-file stats, are tens of
+        #: KB each). Replaced, never mutated.
+        self._newest: dict | None = None
         self._newest_lock = threading.Lock()
 
     def _publish(self, version: int, payload: str) -> bool:
@@ -383,84 +391,58 @@ class CommitLog:
         none) — the idempotence watermark for exactly-once sinks.
         Watermarks fold into checkpoints, so the answer survives log
         cleanup."""
-        head = self.current_version() if until is None else until
-        cp = self._checkpoint_state(head)
-        base = cp["version"] if cp else 0
-        latest = int(cp.get("txns", {}).get(app_id, -1)) if cp else -1
-        for rec in self.read(base, head):
-            t = rec.get("txn")
-            if t and t[0] == app_id:
-                latest = max(latest, int(t[1]))
-        return latest
+        return int(self._state(until)["txns"].get(app_id, -1))
 
     def _write_checkpoint(self, version: int) -> None:
-        """Fold the FULL protocol state at ``version`` into one file —
-        live files and their stats, per-app txn watermarks, and the
-        dirty-tracking maps — so replay (and therefore correctness)
-        never needs records older than the newest checkpoint, which is
-        what makes log cleanup safe. ``stats`` sits next to ``files``
-        (live files only), so a reader that knows only ``files`` is
-        unaffected. Content is a pure function of the log prefix, so
-        overwrite is idempotent; best-effort — a missed checkpoint only
-        means a longer replay."""
-        cp = self._checkpoint_state(version)
-        base = cp["version"] if cp else 0
-        files = set(cp["files"]) if cp else set()
-        stats = dict(cp.get("stats", {})) if cp else {}
-        txns = dict(cp.get("txns", {})) if cp else {}
-        cleared = dict(cp.get("cleared_at", {})) if cp else {}
-        appended = dict(cp.get("appended_at", {})) if cp else {}
-        for rec in self.read(base, version):
-            self._fold_files(rec, files, stats)
-            t = rec.get("txn")
-            if t:
-                txns[t[0]] = max(int(txns.get(t[0], -1)), int(t[1]))
-            self._fold_dirty(rec, cleared, appended)
-        state = {
-            "version": version,
-            "files": sorted(files),
-            "stats": stats,
-            "txns": txns,
-            "cleared_at": cleared,
-            "appended_at": appended,
-        }
+        """Write the protocol state at ``version`` (:meth:`_state`) down
+        as one file, so replay (and therefore correctness) never needs
+        records older than the newest checkpoint, which is what makes
+        log cleanup safe. ``stats`` sits next to ``files`` (live files
+        only), so a reader that knows only ``files`` is unaffected.
+        Content is a pure function of the log prefix, so overwrite is
+        idempotent; best-effort — a missed checkpoint only means a
+        longer replay."""
+        state = self._state(version)
         try:
-            self._fs.write_text_atomic(self._checkpoint_path(version), json.dumps(state))
+            self._fs.write_text_atomic(
+                self._checkpoint_path(version),
+                json.dumps(dict(state, files=sorted(state["files"]))),
+            )
         except OSError:  # pragma: no cover - checkpoint is an optimization
             pass
 
     @staticmethod
-    def _fold_files(rec: dict, files: set[str], stats: dict[str, dict]) -> None:
-        """Replay one record onto a live file set and its stats: add,
-        then discard."""
+    def _fold(rec: dict, state: dict) -> None:
+        """Replay one record onto a protocol state: live files and their
+        stats (add, then discard), the txn watermark, and the dirty
+        maps."""
+        files, stats = state["files"], state["stats"]
         files.update(rec["files_added"])
         stats.update(rec.get("stats", {}))
         for f in rec.get("files_removed", ()):
             files.discard(f)
             stats.pop(f, None)
-
-    @staticmethod
-    def _fold_dirty(rec: dict, cleared: dict, appended: dict) -> None:
+        t = rec.get("txn")
+        if t:
+            state["txns"][t[0]] = max(int(state["txns"].get(t[0], -1)), int(t[1]))
         # only a canonicalizing rewrite (merge) clears dirtiness; a
         # compaction (``canonical: false``) copies rows as they are, so
-        # a delete or append it swept up still needs its merge
-        if rec["kind"] == "rewrite" and rec.get("canonical", True):
-            rv = rec.get("read_version", rec["version"])
+        # a delete or append it swept up still needs its merge. A
+        # restored snapshot may predate its own canonicalization, so
+        # restore re-dirties every partition it touches (never the
+        # reverse: restore must not CLEAR dirtiness like a rewrite)
+        kind, marks = rec["kind"], None
+        if kind == "rewrite" and rec.get("canonical", True):
+            marks, at = state["cleared_at"], rec.get("read_version", rec["version"])
+        elif kind == "restore" or (
+            kind in ("append", "bootstrap") and rec["files_added"]
+        ):
+            marks, at = state["appended_at"], rec["version"]
+        if marks is not None:
             for p in rec["partitions"]:
                 key = "/".join(p)
-                cleared[key] = max(cleared.get(key, 0), rv)
-        elif rec["kind"] in ("append", "bootstrap") and rec["files_added"]:
-            for p in rec["partitions"]:
-                key = "/".join(p)
-                appended[key] = max(appended.get(key, 0), rec["version"])
-        elif rec["kind"] == "restore":
-            # a restored snapshot may predate its own canonicalization,
-            # so every touched partition becomes dirty again — a later
-            # merge re-folds it (never the reverse: restore must not
-            # CLEAR dirtiness like a rewrite would)
-            for p in rec["partitions"]:
-                key = "/".join(p)
-                appended[key] = max(appended.get(key, 0), rec["version"])
+                marks[key] = max(marks.get(key, 0), at)
+        state["version"] = rec["version"]
 
     def oldest_version(self) -> int:
         """Lowest commit record still present (1 if never cleaned)."""
@@ -502,11 +484,7 @@ class CommitLog:
                     removed.append(name)
             except OSError:
                 pass  # raced with its own best-effort cleanup
-        cps = sorted(
-            int(n[len("checkpoint-") : -5])
-            for n in listing
-            if n.startswith("checkpoint-") and n.endswith(".json")
-        )
+        cps = self._checkpoints(listing)
         if not cps:
             return removed
         horizon = cps[-1]
@@ -532,71 +510,79 @@ class CommitLog:
                 out.append(json.loads(self._fs.read_text(self._path(v))))
         return sorted(out, key=lambda r: r["version"])
 
-    def _checkpoint_state(self, at_or_before: int) -> dict | None:
-        cps = sorted(
+    def _checkpoints(self, listing: list[str] | None = None) -> list[int]:
+        return sorted(
             int(n[len("checkpoint-") : -5])
-            for n in self._fs.listdir(self.root)
+            for n in (self._fs.listdir(self.root) if listing is None else listing)
             if n.startswith("checkpoint-") and n.endswith(".json")
         )
-        for v in reversed(cps):
+
+    def _checkpoint_state(self, at_or_before: int) -> dict | None:
+        for v in reversed(self._checkpoints()):
             if v <= at_or_before:
                 return json.loads(self._fs.read_text(self._checkpoint_path(v)))
         return None
 
-    def _replay(
-        self, version: int | None, use_checkpoint: bool = True
-    ) -> tuple[set[str], dict[str, dict]]:
-        """(live files, stats) at ``version``; callers must not mutate
-        them (they may be the cached newest state)."""
+    @staticmethod
+    def _thaw(cp: dict) -> dict:
+        # a private, mutable copy of a state or a checkpoint; checkpoints
+        # written before stats/txns/dirty maps existed load them empty
+        maps = ("stats", "txns", "cleared_at", "appended_at")
+        return {"version": cp["version"], "files": set(cp["files"]),
+                **{k: dict(cp.get(k, {})) for k in maps}}
+
+    def _state(self, version: int | None = None) -> dict:
+        """The protocol state at ``version`` (default: head), the shape
+        a checkpoint stores: ``{version, files (set), stats, txns,
+        cleared_at, appended_at}``. Every log answer reads it; callers
+        must not mutate it (it may be the cached newest state).
+
+        Replays from the cached newest state when it is not past the
+        target, else from the nearest checkpoint at or before it: cost
+        is O(CHECKPOINT_INTERVAL) record reads. ``version`` is the last
+        record folded, so a target past the head is never remembered
+        as that unwritten version. Raises :class:`LogTruncated` when
+        log cleanup removed records the replay needs."""
         head = self.current_version() if version is None else version
-        newest = self._newest if use_checkpoint else None
-        if newest is not None and newest[0] == head:
-            return newest[1], newest[2]
+        newest = self._newest
+        if newest is not None and newest["version"] == head:
+            return newest
         if (
             newest is not None
-            and newest[0] < head
-            and newest[0] + 1 >= self.oldest_version()
+            and newest["version"] < head
+            and newest["version"] + 1 >= self.oldest_version()
         ):
-            base, files, stats = newest[0], set(newest[1]), dict(newest[2])
+            state = self._thaw(newest)
         else:
-            cp = self._checkpoint_state(head) if use_checkpoint else None
-            base = cp["version"] if cp else 0
-            files = set(cp["files"]) if cp else set()
-            stats = dict(cp.get("stats", {})) if cp else {}
+            state = self._thaw(self._checkpoint_state(head) or {"version": 0, "files": ()})
+            base = state["version"]
             if head > base and base + 1 < self.oldest_version():
                 raise LogTruncated(
                     f"records ({base}, {head}] predate log cleanup; "
                     "this version is no longer reconstructible"
                 )
-        recs = self.read(since=base, until=head)
-        for rec in recs:
-            self._fold_files(rec, files, stats)
-        # a version past the log's head replays to the head: never
-        # remember that state under the unwritten version number
-        exists = head == base or (recs and recs[-1]["version"] == head)
-        if use_checkpoint and exists:
-            with self._newest_lock:
-                if self._newest is None or head > self._newest[0]:
-                    self._newest = (head, files, stats)
-        return files, stats
+        for rec in self.read(since=state["version"], until=head):
+            self._fold(rec, state)
+        with self._newest_lock:
+            if self._newest is None or state["version"] > self._newest["version"]:
+                self._newest = state
+        return state
 
-    def snapshot(self, version: int | None = None, use_checkpoint: bool = True) -> list[str]:
+    def snapshot(self, version: int | None = None) -> list[str]:
         """Live data files at ``version`` (default: head) — the MVCC
-        read set. Replays from the nearest checkpoint at or before the
-        target, so cost is O(CHECKPOINT_INTERVAL) record reads. Raises
-        :class:`LogTruncated` for a version whose records log cleanup
-        has removed (time travel expires with the retention window,
-        exactly like Delta after VACUUM + log cleanup)."""
-        return sorted(self._replay(version, use_checkpoint)[0])
+        read set. Raises :class:`LogTruncated` for a version whose
+        records log cleanup has removed (time travel expires with the
+        retention window, exactly like Delta after VACUUM + log
+        cleanup)."""
+        return sorted(self._state(version)["files"])
 
     def snapshot_stats(self, version: int | None = None) -> dict[str, dict | None]:
         """``{file: stats}`` for every live file at ``version`` — the
-        keys are exactly :meth:`snapshot`, replayed with the same
-        add/remove algebra. None marks a file whose add carried no
-        stats (a bootstrap adoption, or a log written before stats
-        were recorded)."""
-        files, stats = self._replay(version)
-        return {f: stats.get(f) for f in sorted(files)}
+        keys are exactly :meth:`snapshot`. None marks a file whose add
+        carried no stats (a bootstrap adoption, or a log written before
+        stats were recorded)."""
+        state = self._state(version)
+        return {f: state["stats"].get(f) for f in sorted(state["files"])}
 
     def files_since(self, since: int) -> tuple[list[str], set[tuple[str, ...]]]:
         """Incremental read set after commit ``since``:
@@ -638,31 +624,20 @@ class CommitLog:
                 live[f] = None
             for f in c.get("files_removed", ()):
                 live.pop(f, None)
-        files = [
-            f
-            for f in live
-            if tuple(seg.split("=", 1)[1] for seg in f.split("/")[:-1] if "=" in seg)
-            not in rescan
-        ]
+        files = [f for f in live if _partition_of(f) not in rescan]
         return files, rescan
 
     def dirty_partitions(self) -> list[tuple[str, ...]]:
         """Partitions with appended files newer than the last rewrite
         that covered them — derived from the log, so the answer is
-        exact under cross-driver concurrency (tags are advisory; the
-        log is authoritative). A rewrite clears a partition up to its
-        ``read_version``: an append that committed after the rewrite's
-        snapshot was taken leaves the partition dirty even though the
-        rewrite's own version is higher."""
-        head = self.current_version()
-        cp = self._checkpoint_state(head)
-        base = cp["version"] if cp else 0
-        cleared = dict(cp.get("cleared_at", {})) if cp else {}
-        appended = dict(cp.get("appended_at", {})) if cp else {}
-        for c in self.read(base, head):
-            self._fold_dirty(c, cleared, appended)
+        exact under cross-driver concurrency. A rewrite clears a
+        partition up to its ``read_version``: an append that committed
+        after the rewrite's snapshot was taken leaves the partition
+        dirty even though the rewrite's own version is higher."""
+        state = self._state()
+        cleared = state["cleared_at"]
         return sorted(
-            tuple(k.split("/")) for k, v in appended.items()
+            tuple(k.split("/")) for k, v in state["appended_at"].items()
             if v > cleared.get(k, 0)
         )
 

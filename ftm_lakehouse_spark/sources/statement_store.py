@@ -23,6 +23,9 @@ files:
   * **time travel** — ``raw(as_of=version)`` reads any snapshot whose
     retired files vacuum has not yet reaped; the version cursor
     (``raw_since`` / ``canonical_since``) rides the same log.
+  * **dirty tracking** — the log is the only record of which
+    partitions need a merge (``dirty_partitions``); ``_meta/tags.json``
+    holds nothing but the store-wide ``last_*`` freshness stamps.
   * **clustering** — ``sortWithinPartitions(entity_id, ...)`` before
     every write keeps an entity's rows contiguous within files so
     min/max stats skip files on point lookups (reference 7-key sort O1,
@@ -57,7 +60,7 @@ from ftm_lakehouse_spark.model.statement import (
     with_canonical_id,
 )
 from ftm_lakehouse_spark.operators.merge import canonicalize
-from ftm_lakehouse_spark.sources.commits import CommitLog
+from ftm_lakehouse_spark.sources.commits import CommitLog, _partition_of
 from ftm_lakehouse_spark.sources.fs import get_fs
 from ftm_lakehouse_spark.sources.parquet_meta import encode_bound, read_file_stats
 
@@ -66,13 +69,6 @@ __all__ = ["StatementStore", "TagStore"]
 
 def _lock_key(path: str) -> str:
     return path if "://" in path else os.path.abspath(path)
-
-
-def _partition_of(rel_file: str) -> tuple[str, ...]:
-    """``shard=0/bucket=a/origin=x/part-...parquet`` → ``(0, a, x)``."""
-    return tuple(
-        seg.split("=", 1)[1] for seg in rel_file.split("/")[:-1] if "=" in seg
-    )
 
 
 def _overlaps(stats: dict | None, column: str, lo: str, hi: str) -> bool:
@@ -84,16 +80,17 @@ def _overlaps(stats: dict | None, column: str, lo: str, hi: str) -> bool:
 
 
 class TagStore:
-    """Freshness tags: ``key -> iso timestamp`` (reference
-    storage/tags.py:24-69). Drives op-level "target newer than deps →
-    skip" (I4) and human-facing freshness. A tiny driver-side control
-    file — deliberately not a Spark table: it is read per job, written
-    once per job, and must be cheap. Lives behind the FS shim so a
-    store rooted at a Hadoop URI keeps its tags next to its data (S16).
+    """Freshness stamps: ``key -> iso timestamp`` (reference
+    storage/tags.py:24-69) — ``last_updated``, ``last_optimized`` and
+    ``last_made``, which drive op-level "target newer than deps → skip"
+    (I4) and human-facing freshness. A tiny driver-side control file —
+    deliberately not a Spark table: it is read per job, written once
+    per job, and must be cheap. Lives behind the FS shim so a store
+    rooted at a Hadoop URI keeps its tags next to its data (S16).
 
     Tags are ADVISORY under cross-driver concurrency (read-modify-write
-    may lose a racing touch); anything correctness-bearing — dirty
-    partition tracking — derives from the commit log instead."""
+    may lose a racing touch); per-partition dirtiness is not a tag —
+    only the commit log records it."""
 
     _locks: dict[str, threading.Lock] = {}
     _locks_guard = threading.Lock()
@@ -240,18 +237,6 @@ class StatementStore:
         return with_canonical_id(self.raw().filter(live_filter()))
 
     # --------------------------------------------------------- writes
-    @staticmethod
-    def _partition_tag(shard: str, bucket: str, origin: str) -> str:
-        """Tag key for one (shard, bucket, origin) partition. Values
-        arrive as Hive-ESCAPED path segments since the round-12
-        single-pass append derives partitions from staged file names;
-        decode them (exact inverse — Hive escapes '%' itself) so tag
-        keys keep matching the column-value keys every pre-r12 append
-        wrote for origins with escapable characters (ADVICE r12)."""
-        from urllib.parse import unquote
-
-        return f"updated:{unquote(shard)}/{unquote(bucket)}/{unquote(origin)}"
-
     def _ensure_bootstrap(self) -> None:
         """Adopt pre-log data files into the log before the first
         logged write (idempotent; exactly one racing driver wins).
@@ -488,13 +473,6 @@ class StatementStore:
             # append, empty or not) without a commit record
             self.tags.touch("last_updated")
             return
-        # advisory freshness stamped BEFORE data becomes VISIBLE (the
-        # commit below; staged-then-moved files are untracked until it
-        # lands — crash-safe ordering, reference storage/parquet.py:
-        # 545-569): a crash leaves the partition marked dirty, never
-        # visibly clean with new data
-        for shard, bucket, origin in parts:
-            self.tags.touch(self._partition_tag(shard, bucket, origin))
         # the atomic replay re-check inside commit() closes the race
         # two concurrent replays of one epoch could otherwise hit;
         # a loser's staged files are untracked and vacuumed
@@ -617,7 +595,7 @@ class StatementStore:
 
         ``canonical=False`` (compaction) records that the rows were
         copied, not canonicalized: the rewritten partitions keep any
-        pending merge (``CommitLog._fold_dirty``)."""
+        pending merge (``CommitLog._fold``)."""
         self._ensure_bootstrap()
         if read_version is None:
             read_version = self.commits.current_version()
@@ -644,23 +622,11 @@ class StatementStore:
 
     # ---------------------------------------------------- maintenance
     def dirty_partitions(self) -> list[tuple[str, str, str]]:
-        """Partitions appended to since the last rewrite that covered
-        them. Authoritative answer from the commit log (exact under
-        cross-driver concurrency — an append racing a merge leaves its
-        partition dirty because its commit version exceeds the merge's
-        ``read_version``); pre-log stores fall back to the advisory
-        ``updated:``/``optimized:`` tags (reference
-        storage/parquet.py:571-641)."""
-        if self.commits.current_version():
-            return [tuple(p) for p in self.commits.dirty_partitions()]
-        out = []
-        for key in self.tags._load():
-            if not key.startswith("updated:"):
-                continue
-            part = key.split(":", 1)[1]
-            if not self.tags.is_latest(f"optimized:{part}", [key]):
-                out.append(tuple(part.split("/")))
-        return sorted(out)
+        """Partitions appended to since the last merge that covered
+        them, from the commit log (exact under cross-driver concurrency
+        — an append racing a merge leaves its partition dirty because
+        its commit version exceeds the merge's ``read_version``)."""
+        return [tuple(p) for p in self.commits.dirty_partitions()]
 
     def merge(self, grace_days: int = 30, force: bool = False) -> bool:
         """Canonicalize dirty partitions — partition-scoped: clean
@@ -696,8 +662,6 @@ class StatementStore:
             self.overwrite_partitions(
                 canonical, expected=dirty, files_removed=target, read_version=head
             )
-            for p in dirty:
-                self.tags.touch(f"optimized:{'/'.join(p)}", now)
             self.tags.touch("last_optimized", now)
         return True
 
@@ -862,7 +826,7 @@ class StatementStore:
         and the restore itself is time-travelable — ``raw(as_of=
         pre_restore_head)`` still reads the undone state until vacuum
         ages it out. Restored partitions are marked DIRTY
-        (CommitLog._fold_dirty), because the snapshot being restored
+        (``CommitLog._fold``), because the snapshot being restored
         may predate its own canonicalization; a later merge simply
         re-folds them. Raises ``LogTruncated`` when ``version``
         predates log cleanup, and a loud ``RuntimeError`` when the
@@ -896,11 +860,6 @@ class StatementStore:
                     f"(e.g. {missing[0]}); restore reach is bounded by the "
                     "vacuum retention window"
                 )
-            # advisory freshness BEFORE visibility flips (crash leaves
-            # partitions marked stale, never fresh) — same ordering as
-            # append
-            for p in touched:
-                self.tags.touch(self._partition_tag(*p))
             new_version = self.commits.commit(
                 "restore",
                 [list(p) for p in touched],

@@ -412,7 +412,12 @@ def test_snapshot_past_head_is_not_remembered_as_that_version(tmp_path):
 def test_only_canonical_rewrites_clear_dirty_partitions(tmp_path, monkeypatch):
     """A compaction record (``canonical: false``) leaves its partitions
     dirty; a merge record clears them — replayed from records and from
-    a checkpoint alike."""
+    a checkpoint alike. Every log answer is one replayed state: at
+    every version a long-lived log and a fresh one agree on files,
+    stats, txn watermarks and dirty partitions, and once the head is
+    replayed no answer re-reads a record."""
+    import json
+
     from ftm_lakehouse_spark.sources import commits as commits_mod
     from ftm_lakehouse_spark.sources.commits import CommitLog
     from ftm_lakehouse_spark.sources.fs import LocalFS
@@ -422,15 +427,64 @@ def test_only_canonical_rewrites_clear_dirty_partitions(tmp_path, monkeypatch):
     root = str(tmp_path / "log")
     fs.mkdirs(root)
     log = CommitLog(fs, root)
-    p = ("0", "thing", "x")
-    log.commit("append", [p], ["a.parquet"])
+
+    def agree():
+        fresh = CommitLog(fs, root)
+        assert log.dirty_partitions() == fresh.dirty_partitions()
+        for v in range(log.current_version() + 1):
+            assert log.snapshot(v) == fresh.snapshot(v)
+            assert log.snapshot_stats(v) == fresh.snapshot_stats(v)
+            assert log.txn_version("app", v) == fresh.txn_version("app", v)
+
+    def st(n):
+        return {"numRecords": n, "size": 100 * n}
+
+    p, q = ("0", "thing", "x"), ("1", "thing", "x")
+    log.commit("append", [p], ["a.parquet"], stats={"a.parquet": st(1)})
     log.commit("rewrite", [p], ["b.parquet"], ["a.parquet"], read_version=1,
-               canonical=False)
+               canonical=False, stats={"b.parquet": st(2)})
     assert log.read(1)[-1]["canonical"] is False
     assert log.dirty_partitions() == [p]
-    log.commit("append", [("1", "thing", "x")], ["c.parquet"])  # checkpoint 3
+    agree()
+    log.commit("append", [q], ["c.parquet"], txn=("app", 7))  # checkpoint 3
     assert fs.exists(log._checkpoint_path(3))
-    assert CommitLog(fs, root).dirty_partitions() == [p, ("1", "thing", "x")]
+    cp = json.loads(fs.read_text(log._checkpoint_path(3)))
+    assert list(cp) == [
+        "version", "files", "stats", "txns", "cleared_at", "appended_at"
+    ]
+    assert cp == {
+        "version": 3,
+        "files": ["b.parquet", "c.parquet"],
+        "stats": {"b.parquet": st(2)},
+        "txns": {"app": 7},
+        "cleared_at": {},
+        "appended_at": {"0/thing/x": 1, "1/thing/x": 3},
+    }
+    assert CommitLog(fs, root).dirty_partitions() == [p, q]
+    assert log.txn_version("app") == 7 and log.txn_version("other") == -1
+    agree()
     log.commit("rewrite", [p], ["d.parquet"], ["b.parquet"], read_version=3)
     assert "canonical" not in log.read(3)[-1]
-    assert log.dirty_partitions() == [("1", "thing", "x")]
+    assert log.dirty_partitions() == [q]
+    agree()
+    # restore to version 2 re-adds b (and its stats), retires d and c,
+    # and re-dirties the partitions it touched
+    log.commit("restore", [p, q], ["b.parquet"], ["c.parquet", "d.parquet"],
+               read_version=4, stats={"b.parquet": st(2)})
+    assert log.snapshot_stats() == {"b.parquet": st(2)}
+    assert log.dirty_partitions() == [p, q]
+    assert log.txn_version("app") == 7
+    agree()
+    log.commit("append", [q], ["e.parquet"], txn=("app", 9))  # checkpoint 6
+    assert json.loads(fs.read_text(log._checkpoint_path(6)))["txns"] == {"app": 9}
+    log.commit("append", [p], ["f.parquet"])
+    agree()
+
+    reads = []
+    real_read = fs.read_text
+    monkeypatch.setattr(fs, "read_text", lambda path: reads.append(path) or real_read(path))
+    log.snapshot()
+    assert reads == []
+    assert log.dirty_partitions() == [p, q]
+    assert log.txn_version("app") == 9
+    assert reads == []
