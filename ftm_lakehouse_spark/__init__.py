@@ -1,7 +1,7 @@
 """ftm_lakehouse_spark — a PySpark-native lakehouse engine.
 
 A brand-new engine with the query and data-processing capabilities of
-openaleph/ftm-lakehouse (reference surveyed in /root/repo/SURVEY.md),
+openaleph/ftm-lakehouse (reference surveyed in SURVEY.md),
 re-expressed Spark-first: DataFrame/SQL plans optimized by Catalyst,
 hive-partitioned Parquet storage with dynamic partition overwrite,
 window-based merge semantics, and a set of large-scale training-data

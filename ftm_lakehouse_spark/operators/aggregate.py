@@ -40,6 +40,7 @@ from ftm_lakehouse_spark.model.ontology import (
     SCHEMA_SPECIFICITY,
 )
 from ftm_lakehouse_spark.functions.literals import (
+    folded,
     lit_str_array_map,
     lit_str_int_map,
 )
@@ -52,17 +53,18 @@ CAPTION_PROPS = ("name", "title", "fileName", "full")
 
 
 def _ancestors_map():
-    # one F.expr round trip instead of ~300 F.lit/F.array calls
-    # (functions/literals); sorted keys keep the plan text deterministic
-    return lit_str_array_map(
+    # one F.expr round trip instead of ~300 F.lit/F.array calls, folded
+    # to a literal once (functions/literals); sorted keys keep the plan
+    # text deterministic
+    return folded(lit_str_array_map(
         {k: v for k, v in sorted(SCHEMA_ANCESTORS.items())}
-    )
+    ))
 
 
 def _depth_map():
-    return lit_str_int_map(
+    return folded(lit_str_int_map(
         {k: v for k, v in sorted(SCHEMA_SPECIFICITY.items())}
-    )
+    ))
 
 
 def merge_schemata(schemata):
@@ -105,22 +107,29 @@ def merge_schemata(schemata):
     return F.aggregate(ordered, F.element_at(ordered, 1), pair)
 
 
-def assemble_entities(
-    statements: DataFrame, max_values_per_prop: int | None = None
-) -> DataFrame:
-    """statements (live view) → one row per entity.
+#: ``max_values_per_prop`` -> (SparkContext, the assembly's Column
+#: lists); see :func:`_assembly_columns`
+_COLUMNS: dict[int | None, tuple[object, tuple]] = {}
 
-    Output schema:
-      entity_id, caption, schema,
-      properties map<string, array<string>>,
-      first_seen, last_seen, last_change,
-      origins array<string>, n_statements
 
-    ``max_values_per_prop`` bounds per-group state for pathological
-    entities (an entity with millions of values of one prop would
-    otherwise blow the collect buffer at export time); values are kept
-    in sorted order so the cap is deterministic.
-    """
+def _assembly_columns(sc, max_values_per_prop: int | None) -> tuple:
+    """The Columns of :func:`assemble_entities` — per-prop aggregates,
+    entity aggregates, the checksum-only filter, final select — built once per
+    SparkContext and ``max_values_per_prop``. Building them costs
+    ~1000 py4j round trips (the ontology maps of ``merge_schemata``,
+    every ``F.col``/``F.when``); unresolved Columns hold no plan, so
+    one set serves every query. The entry is keyed on the context
+    object itself, so a stopped and restarted session rebuilds it, and
+    it is replaced, never mutated."""
+    hit = _COLUMNS.get(max_values_per_prop)
+    if hit is not None and hit[0] is sc:
+        return hit[1]
+    cols = _build_assembly_columns(max_values_per_prop)
+    _COLUMNS[max_values_per_prop] = (sc, cols)
+    return cols
+
+
+def _build_assembly_columns(max_values_per_prop: int | None) -> tuple:
     is_checksum = (F.col("prop") == BASE_ID_PROP) & (
         F.col("prop_type") == BASE_ID_PROP_TYPE
     )
@@ -129,23 +138,21 @@ def assemble_entities(
         F.array(*[F.lit(p) for p in CAPTION_PROPS]), F.col("prop")
     )
 
-    # per-(entity, prop) value arrays first: two-level fold keeps the
-    # per-group state bounded (values of one prop), and the second
-    # groupBy reuses the same entity_id hash partitioning. ONE pass
-    # (round-12, guide §1.2): checksum rows ride the same aggregation
-    # as conditional aggregates — the previous two-subtree form
-    # (filtered per-prop fold + a separate last_change aggregation,
-    # re-joined on entity_id) scanned the statements input twice and
-    # paid an extra exchange + join. collect_set/min/max ignore the
-    # NULLs the ``when`` guards produce, so per-group results are
-    # byte-identical; checksum-only groups are carried with ``n = 0``
-    # and folded out below exactly where the old filter dropped them.
+    # ONE pass (round-12, guide §1.2): checksum rows ride the same
+    # per-prop aggregation as conditional aggregates — the previous
+    # two-subtree form (filtered per-prop fold + a separate last_change
+    # aggregation, re-joined on entity_id) scanned the statements input
+    # twice and paid an extra exchange + join. collect_set/min/max
+    # ignore the NULLs the ``when`` guards produce, so per-group
+    # results are byte-identical; checksum-only groups are carried with
+    # ``n = 0`` and folded out below exactly where the old filter
+    # dropped them.
     values_expr = F.array_sort(
         F.collect_set(F.when(~is_checksum, F.col("value")))
     )
     if max_values_per_prop is not None:
         values_expr = F.slice(values_expr, 1, max_values_per_prop)
-    per_prop = statements.groupBy("entity_id", "prop").agg(
+    per_prop = (
         values_expr.alias("values"),
         F.collect_set(F.when(~is_checksum, F.col("schema"))).alias("schemata"),
         F.min(F.when(~is_checksum, F.col("first_seen"))).alias("first_seen"),
@@ -174,7 +181,7 @@ def assemble_entities(
     real_groups = F.filter(
         F.collect_list(F.struct("prop", "values", "n")), lambda g: g["n"] > 0
     )
-    entities = per_prop.groupBy("entity_id").agg(
+    per_entity = (
         F.map_from_entries(
             F.array_sort(
                 F.transform(
@@ -194,19 +201,56 @@ def assemble_entities(
         F.max("_lc").alias("_last_change"),
     )
 
+    final = (
+        F.col("entity_id"),
+        F.col("caption"),
+        merge_schemata(F.col("_schemata")).alias("schema"),
+        F.col("properties"),
+        F.col("first_seen"),
+        F.col("last_seen"),
+        F.coalesce("_last_change", "first_seen").alias("last_change"),
+        F.array_sort("origins").alias("origins"),
+        F.col("n_statements"),
+    )
+    # an entity whose every statement is a checksum row was absent
+    # from the old per-prop universe — dropped the same way
+    return per_prop, per_entity, F.col("n_statements") > 0, final
+
+
+def assemble_entities(
+    statements: DataFrame, max_values_per_prop: int | None = None
+) -> DataFrame:
+    """statements (live view) → one row per entity.
+
+    Output schema:
+      entity_id, caption, schema,
+      properties map<string, array<string>>,
+      first_seen, last_seen, last_change,
+      origins array<string>, n_statements
+
+    ``max_values_per_prop`` bounds per-group state for pathological
+    entities (an entity with millions of values of one prop would
+    otherwise blow the collect buffer at export time); values are kept
+    in sorted order so the cap is deterministic.
+
+    Plan: ONE exchange. The input is hash-partitioned on ``entity_id``
+    first; that partitioning satisfies both the per-``(entity_id,
+    prop)`` fold (bounded per-group state: the values of one prop) and
+    the per-entity fold above it, so both aggregate partition-locally.
+    Grouping straight on ``(entity_id, prop)`` would shuffle on that
+    pair and then again on ``entity_id``. AQE still coalesces the
+    exchange's partitions. The Column lists come prebuilt
+    (:func:`_assembly_columns`).
+    """
+    per_prop, per_entity, has_values, final = _assembly_columns(
+        statements.sparkSession.sparkContext, max_values_per_prop
+    )
     return (
-        # an entity whose every statement is a checksum row was absent
-        # from the old per-prop universe — drop it here the same way
-        entities.filter(F.col("n_statements") > 0)
-        .select(
-            "entity_id",
-            "caption",
-            merge_schemata(F.col("_schemata")).alias("schema"),
-            "properties",
-            "first_seen",
-            "last_seen",
-            F.coalesce("_last_change", "first_seen").alias("last_change"),
-            F.array_sort("origins").alias("origins"),
-            "n_statements",
-        )
+        statements.repartition("entity_id")
+        .groupBy("entity_id", "prop")
+        .agg(*per_prop)
+        .groupBy("entity_id")
+        .agg(*per_entity)
+        .filter(has_values)
+        .select(*final)
     )

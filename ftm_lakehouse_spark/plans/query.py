@@ -13,6 +13,13 @@ Semantics (from reference usage sites, tests/test_repository_entities.py):
     ALL statements of matching entities (EAV semi-join, F5);
   * ``schema=`` folds into a ``bucket IN (...)`` partition prune before
     the schema equality (F3);
+  * id matching is a single pass: without prop filters it is the
+    pruned ``filter(pred).distinct()``; with them, one scan keeps the
+    rows matching the row predicate OR any prop filter and one
+    ``groupBy(entity_id)`` checks that every one of them was matched
+    by some row — one exchange instead of a ``distinct`` and a
+    semi-join per filter. The prop filters read every partition
+    anyway, so the row side's bucket prune costs no extra file;
   * ``order_by``/slicing operate at entity grain (O4/O5): rank entity
     ids first, then semi-join back to statements — never a row LIMIT;
   * ``origin=`` is a row-level filter (F6).
@@ -115,15 +122,16 @@ class Query:
         """DataFrame of ``entity_id`` matching every filter (the
         ftmq ``canonical_ids`` subquery analog), sorted/sliced if
         requested."""
-        df = statements
         pred = self._row_predicate()
-        if pred is not None:
-            df = df.filter(pred)
-        ids = df.select("entity_id").distinct()
-        for prop, op, value in self.prop_filters:
-            cond = (F.col("prop") == prop) & _OPS[op](F.col("value"), value)
-            prop_ids = statements.filter(cond).select("entity_id").distinct()
-            ids = ids.join(prop_ids, "entity_id", "left_semi")
+        conds = [
+            (F.col("prop") == prop) & _OPS[op](F.col("value"), value)
+            for prop, op, value in self.prop_filters
+        ]
+        if not conds:
+            df = statements if pred is None else statements.filter(pred)
+            ids = df.select("entity_id").distinct()
+        else:
+            ids = _ids_with_every(statements, conds if pred is None else [pred, *conds])
 
         if not self.sort and self.stop is None and self.start == 0:
             return ids
@@ -188,6 +196,33 @@ class Query:
         for prop, op, value in self.prop_filters:
             df = df.filter((F.col("prop") == prop) & _OPS[op](F.col("value"), value))
         return df
+
+
+def _ids_with_every(statements: DataFrame, conds: list[Column]) -> DataFrame:
+    """Ids of entities that have, for EACH condition, a row matching
+    it — in one scan and one exchange: keep the rows matching any
+    condition, then one ``groupBy(entity_id)`` folds a per-condition
+    "some row matched" flag. Conditions are tested independently, so
+    two filters on the same prop may match two different rows, and a
+    NULL condition result counts as no match (as ``filter`` reads it).
+    """
+    any_cond = conds[0]
+    for c in conds[1:]:
+        any_cond = any_cond | c
+    flags = [
+        F.max(F.coalesce(c, F.lit(False))).alias(f"_m{i}")
+        for i, c in enumerate(conds)
+    ]
+    every = F.col("_m0")
+    for i in range(1, len(conds)):
+        every = every & F.col(f"_m{i}")
+    return (
+        statements.filter(any_cond)
+        .groupBy("entity_id")
+        .agg(*flags)
+        .filter(every)
+        .select("entity_id")
+    )
 
 
 def _global_rank(keyed: DataFrame, order: list[Column]) -> DataFrame:

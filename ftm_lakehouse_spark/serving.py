@@ -343,7 +343,8 @@ class PointReader:
                  "first_seen": r["first_seen"], "last_seen": r["last_seen"],
                  "n": 0},
             )
-            g["values"].add(r["value"])
+            if r["value"] is not None:  # collect_set drops NULLs
+                g["values"].add(r["value"])
             g["schemata"].add(r["schema"])
             g["origins"].add(r["origin"])
             g["first_seen"] = min(g["first_seen"], r["first_seen"])
@@ -358,7 +359,7 @@ class PointReader:
             )
 
         cap_prop = min(by_prop, key=lambda p: (caption_rank(p), p))
-        caption = properties[cap_prop][0]
+        caption = properties[cap_prop][0] if properties[cap_prop] else None
 
         schemata = {s for g in by_prop.values() for s in g["schemata"]}
         first_seen = min(g["first_seen"] for g in by_prop.values())

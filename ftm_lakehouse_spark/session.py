@@ -67,6 +67,11 @@ _RUNTIME_CONF = {
     "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
     "spark.sql.sources.partitionOverwriteMode": "dynamic",
     "spark.sql.parquet.compression.codec": "zstd",
+    # functions/literals.sql_str escapes backslash and quote for the
+    # default parser; with escaped string literals ON the backslashes
+    # would be kept verbatim and every ontology map literal would
+    # differ from its F.lit form
+    "spark.sql.parser.escapedStringLiterals": "false",
     # modern parquet timestamps (µs int64) instead of legacy INT96:
     # INT96 columns carry NO min/max statistics, which blinds every
     # footer-stat consumer (scan_range pruning, z-order clustering,

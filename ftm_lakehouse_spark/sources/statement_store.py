@@ -179,6 +179,8 @@ class StatementStore:
         # and serving.PointReader.
         hook = getattr(self._fs, "pyarrow_fs", None)
         self._read_plane = hook() if hook else (None, lambda p: p)
+        # (head version, raw() DataFrame at that head): see raw()
+        self._head_raw: tuple[int, DataFrame] | None = None
 
     # ---------------------------------------------------------- reads
     def _data_path(self) -> str:
@@ -201,7 +203,16 @@ class StatementStore:
         is the commit log's file snapshot — never a directory listing —
         so concurrent rewrites are invisible until their single atomic
         commit, and ``as_of`` reads any un-vacuumed historical version
-        (Delta time travel, reference diff.py:62-83)."""
+        (Delta time travel, reference diff.py:62-83).
+
+        One head snapshot is one relation: the head read
+        (``as_of=None``) is built once per commit version and returned
+        again while the head is unchanged — building the 16-file
+        ``spark.read.parquet`` relation is ~40 ms of driver work, and
+        data files are immutable, so a version names one fixed file set.
+        ``as_of`` reads are built per call: their files may be vacuumed
+        between calls, and the caller's time-travel error handling
+        expects the read to fail then, not a stale relation."""
         head = self.commits.current_version()
         if head == 0:
             if as_of is not None:
@@ -216,11 +227,18 @@ class StatementStore:
                     self._data_path()
                 )
             return self.spark.createDataFrame([], STATEMENT_SCHEMA)
-        files = self.commits.snapshot(as_of)
+        slot = self._head_raw
+        if as_of is None and slot is not None and slot[0] == head:
+            return slot[1]
+        files = self.commits.snapshot(head if as_of is None else as_of)
         if not files:
-            return self.spark.createDataFrame([], STATEMENT_SCHEMA)
-        data = self._data_path()
-        return self._read_files([self._fs.join(data, f) for f in files])
+            df = self.spark.createDataFrame([], STATEMENT_SCHEMA)
+        else:
+            data = self._data_path()
+            df = self._read_files([self._fs.join(data, f) for f in files])
+        if as_of is None:
+            self._head_raw = (head, df)
+        return df
 
     def _read_files(self, paths: list[str]) -> DataFrame:
         # basePath recovers hive partition columns from explicit paths
@@ -732,11 +750,16 @@ class StatementStore:
         file without stats for ``column`` (every file, for ``value``
         and the partition columns) is always read, and a bound with no
         known encoding prunes nothing. Results are EXACTLY ``raw()``
-        filtered to the range (pinned by test_zorder)."""
+        filtered to the range (pinned by test_zorder).
+
+        When the stats prune no file, the scan is ``raw().filter(pred)``
+        over the head relation ``raw()`` keeps (built once per head
+        version), so the call builds no new file relation."""
         pred = F.col(column).between(F.lit(lo), F.lit(hi))
-        if not self.commits.current_version():
+        head = self.commits.current_version()
+        if not head:
             return self.raw().filter(pred)
-        stats = self.commits.snapshot_stats()
+        stats = self.commits.snapshot_stats(head)
         keep = list(stats)
         tz = self.spark.conf.get("spark.sql.session.timeZone")
         lo_s, hi_s = encode_bound(column, lo, tz), encode_bound(column, hi, tz)
@@ -745,6 +768,8 @@ class StatementStore:
             keep = [f for f in keep if _overlaps(stats[f], column, lo_s, hi_s)]
         if not keep:
             return self.spark.createDataFrame([], STATEMENT_SCHEMA).filter(pred)
+        if len(keep) == len(stats):
+            return self.raw().filter(pred)
         data = self._data_path()
         return self._read_files([self._fs.join(data, f) for f in keep]).filter(pred)
 

@@ -2,7 +2,7 @@
 
 ``/root/testdata/sf*/`` holds a TPC-H-ish star schema plus ``events``
 (ns-timestamp stream table), ``documents`` (text corpus) and
-``embeddings`` (vector corpus). See /root/repo/TESTDATA.md.
+``embeddings`` (vector corpus). See TESTDATA.md.
 
 The only normalization applied is ``events.ts``, which must come out
 a tz-aware UTC microsecond TIMESTAMP regardless of how the driver

@@ -170,7 +170,7 @@ def test_corpus_report_card(spark):
     import duckdb
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
     from corpus_report import build_report
 
     sf = "/root/testdata/sf0.001"

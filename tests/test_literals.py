@@ -4,10 +4,6 @@ SQL-string rendering must produce exactly the same map/array values for
 the real ontology dicts and for adversarial strings (quotes,
 backslashes, newlines, unicode)."""
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 from pyspark.sql import functions as F
 
 from ftm_lakehouse_spark.functions.literals import (
@@ -81,3 +77,19 @@ def test_empty_map_fallbacks_keep_their_types(spark):
     assert [f.dataType.simpleString() for f in df.schema.fields] == [
         "map<string,string>", "map<string,array<string>>", "map<string,int>"
     ]
+
+
+def test_tune_for_local_pins_unescaped_string_literals(spark):
+    """``sql_str`` escapes for the default parser; a session we did not
+    create may have ``escapedStringLiterals`` on, which keeps every
+    backslash verbatim. ``tune_for_local`` turns it off again, and the
+    literal builders then match their ``F.lit`` form."""
+    from ftm_lakehouse_spark.session import tune_for_local
+
+    session = spark.newSession()  # own SQL conf, shared context
+    session.conf.set("spark.sql.parser.escapedStringLiterals", "true")
+    old = F.create_map(*[F.lit(x) for kv in ADVERSARIAL.items() for x in kv])
+    assert _one(session, lit_str_map(ADVERSARIAL)) != _one(session, old)
+    tune_for_local(session)
+    assert session.conf.get("spark.sql.parser.escapedStringLiterals") == "false"
+    assert _one(session, lit_str_map(ADVERSARIAL)) == _one(session, old)

@@ -28,8 +28,7 @@ import duckdb
 import pandas as pd
 import pytest
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
 
 from check_parity import dtype_classes  # noqa: E402
 

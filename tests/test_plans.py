@@ -497,3 +497,64 @@ def test_repetition_gates_are_one_map_pass(spark):
         assert "Join" not in plan, name
         assert "hashpartitioning" not in plan, name
         assert "HashAggregate" not in plan, name
+
+
+#: py4j commands one warm ``Dataset.entities(Query().where(schema=...,
+#: country=...))`` build may send: 374 measured, plus 20%. Building the
+#: assembly's Column lists anew cost ~1420.
+ENTITY_QUERY_BUILD_CALLS = 450
+
+
+def test_entity_query_build_budget_and_single_assembly_exchange(spark, lake_root):
+    """A repeated entity query is cheap to BUILD (the assembly's Column
+    lists and the head relation are reused, so the build is the query's
+    own few DataFrame calls) and its assembly shuffles ONCE: one hash
+    exchange on ``entity_id`` above the semi-join serves both the
+    per-prop and the per-entity fold."""
+    import re
+
+    import py4j.clientserver as cs
+
+    from ftm_lakehouse_spark.lakehouse import Lakehouse
+    from ftm_lakehouse_spark.plans.query import Query
+
+    from .test_lakehouse import entities_df
+
+    ds = Lakehouse(spark, lake_root).dataset("budget")
+    ds.write_entities(entities_df(spark, *[
+        {"id": f"b{i}", "schema": ("Person", "Company")[i % 2],
+         "properties": {"name": [f"N{i}"], "country": [("de", "fr")[i % 3 > 0]]}}
+        for i in range(12)
+    ]))
+
+    def build():
+        return ds.entities(Query().where(schema="Person", country="de"))
+
+    build()  # first build fills the caches
+    calls = [0]
+    send = cs.ClientServerConnection.send_command
+
+    def counting(self, command, *args, **kwargs):
+        if not command.startswith("m\n"):  # py4j memory release, not a call
+            calls[0] += 1
+        return send(self, command, *args, **kwargs)
+
+    cs.ClientServerConnection.send_command = counting
+    try:
+        df = build()
+    finally:
+        cs.ClientServerConnection.send_command = send
+    assert 0 < calls[0] <= ENTITY_QUERY_BUILD_CALLS, calls[0]
+
+    plan = df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+    tree, details = plan.split("\n\n", 1)
+    semi = int(re.search(r"LeftSemi .*\((\d+)\)$", tree, flags=re.M).group(1))
+    above = "\n\n".join(
+        block for block in details.split("\n\n")
+        if (m := re.match(r"\((\d+)\) ", block)) and int(m.group(1)) > semi
+    )
+    assert _n_exchanges(above) == 1, plan
+    assert re.search(r"Arguments: hashpartitioning\(entity_id#\d+, \d+\)", above), plan
+    assert sorted(r["entity_id"] for r in df.collect()) == ["b0", "b6"]

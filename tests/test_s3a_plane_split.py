@@ -29,6 +29,7 @@ ADVICE fixes pinned here:
 """
 
 import json
+import os
 import subprocess
 import sys
 import threading
@@ -46,6 +47,8 @@ from tests.test_object_store_serving import (  # noqa: F401
     local_ds,
     s3env,
 )
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_get_fs_routes_all_s3_schemes_to_s3fs(s3env):
@@ -162,7 +165,7 @@ def test_multiprocess_commit_storm_over_s3a_root(s3env):
     procs = [
         subprocess.Popen(
             [sys.executable, "-c", _STORM_WORKER, f"w{i}", root, str(n)],
-            stdout=subprocess.PIPE, stderr=subprocess.PIPE, cwd="/root/repo",
+            stdout=subprocess.PIPE, stderr=subprocess.PIPE, cwd=REPO,
         )
         for i in range(workers)
     ]

@@ -2,10 +2,13 @@
 
 import pytest
 import json
+import os
 import subprocess
 import sys
 
 from pyspark.sql import functions as F
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_statements_csv_roundtrip(spark, lake_root, tmp_path):
@@ -68,7 +71,7 @@ def test_cli_smoke(tmp_path):
             [sys.executable, "-m", "ftm_lakehouse_spark", "--root", root, *args],
             capture_output=True,
             text=True,
-            cwd="/root/repo",
+            cwd=REPO,
             timeout=300,
         )
 
@@ -127,7 +130,7 @@ def test_cli_archive_and_publish_surface(tmp_path):
             [sys.executable, "-m", "ftm_lakehouse_spark", "--root", root, *args],
             capture_output=True,
             text=True,
-            cwd="/root/repo",
+            cwd=REPO,
             timeout=300,
         )
 

@@ -12,10 +12,11 @@ time is one full query-batch execution per variant (warm JVM).
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from ftm_lakehouse_spark.operators.similarity import (
     ann_lsh_topk,

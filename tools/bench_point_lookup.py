@@ -35,11 +35,12 @@ Usage: python tools/bench_point_lookup.py [sf_dir] [n_warm]
 from __future__ import annotations
 
 import statistics
+import os
 import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 

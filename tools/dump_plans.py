@@ -5,9 +5,11 @@ changing any operator:  python tools/dump_plans.py
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from ftm_lakehouse_spark.queries.inventory import QUERIES
 from ftm_lakehouse_spark.session import get_spark
@@ -129,7 +131,7 @@ def main() -> None:
             df._jdf.queryExecution(), "formatted"
         )
         out.append(f"## {name}\n\n{note}\n\n```\n{plan.strip()}\n```\n")
-    with open("/root/repo/PLANS.md", "w") as fh:
+    with open(os.path.join(REPO, "PLANS.md"), "w") as fh:
         fh.write("\n".join(out))
     print("wrote PLANS.md")
     spark.stop()

@@ -108,6 +108,8 @@ def generate(R: int, src: str, out: str) -> None:
 if __name__ == "__main__":
     R = int(sys.argv[1]) if len(sys.argv) > 1 else 10
     src = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
-    out = sys.argv[3] if len(sys.argv) > 3 else "/root/repo/.sweep/sf1"
+    out = sys.argv[3] if len(sys.argv) > 3 else os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".sweep", "sf1"
+    )
     generate(R, src, out)
     print(f"wrote {out}; sweep with: python tools/check_parity.py {out}")

@@ -11,10 +11,11 @@ Usage: python tools/run_gates.py <sf_dir> <gate> [gate ...]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from ftm_lakehouse_spark.queries.inventory import query_map
 from ftm_lakehouse_spark.session import get_spark

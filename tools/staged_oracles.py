@@ -22,7 +22,12 @@ division), so the hash must match bit-for-bit.
 
 from __future__ import annotations
 
+import os
+
 import pandas as pd
+
+#: this checkout, put first on sys.path by the oracles that import the engine
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 _PAGERANK_SETUP = [
     """
@@ -96,7 +101,7 @@ def pretrain_staged(con) -> pd.DataFrame:
     for the temp tables — same rows, same hash."""
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, _REPO)
     from ftm_lakehouse_spark.queries.inventory import QUERIES
 
     quality = QUERIES["text_quality_score"][1]
@@ -322,7 +327,7 @@ def curation_staged(con) -> pd.DataFrame:
     metrics compute once per value and expand to survivors."""
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, _REPO)
     from ftm_lakehouse_spark.queries.inventory import _ivf_dists_sql
 
     dists = _ivf_dists_sql(8, 64, 11)
@@ -568,7 +573,7 @@ def knn_blocked_staged(con) -> pd.DataFrame:
     per-query-VALUE answer to every query id sharing the value."""
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, _REPO)
     _embedding_value_tables(con, "kb")
     con.execute(
         """CREATE OR REPLACE TEMP TABLE kb_qrows AS
@@ -630,7 +635,7 @@ def embedding_cosine_staged(con, sample_mod: int | None = None) -> pd.DataFrame:
     static NULL-cosine exclusion)."""
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, _REPO)
     from ftm_lakehouse_spark.queries.inventory import _hyperplane_sig_sql
 
     sig_terms = _hyperplane_sig_sql(16, 64, 7)
@@ -677,7 +682,7 @@ def semantic_staged(con, sample_mod: int | None = None) -> pd.DataFrame:
     1.0 (zero-norm values excluded, as the static NULL does)."""
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, _REPO)
     from ftm_lakehouse_spark.queries.inventory import _ivf_dists_sql
 
     dists = _ivf_dists_sql(8, 64, 11)
